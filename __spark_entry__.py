@@ -21,426 +21,27 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's per-round correctness check truncates at the first 50
-# registry keys (observed in CORRECTNESS_r01.json: exactly registry
-# order, 50 entries). Each round therefore ROTATES the window from the
-# recorded results of all prior rounds: one known-green sentinel plus
-# any key whose latest driver row ERRORED lead, then every
-# never-verified operator WITH an oracle (strongest signal per slot) —
-# including ORACLE-UPGRADED keys whose latest driver row was rows-only
-# (err == "no_oracle") but which have since gained a DuckDB oracle, so
-# the driver hash-confirms what was previously only locally proven —
-# then never-verified rows-only ops, then already-verified keys last,
-# STALENESS-ORDERED (oldest green round first) so r1-verified keys
-# cycle back through the window instead of the same early-registry
-# keys being re-checked every round. Within each tier, registry
-# (import) order breaks ties. No per-round edits needed — dropping a
-# new CORRECTNESS_r{N}.json next to this file re-rotates automatically.
+# keys of queries(), so each round rotates that window from the recorded
+# CORRECTNESS_r{N}.json history of all prior rounds. Four tiers, in order:
+#   1. the known-green sentinel, and every key that is not known-green
+#      (latest driver row errored or mismatched, or no driver row yet);
+#   2. forced re-checks (_FORCE_RECHECK), in that dict's order;
+#   3. rows-only keys (no oracle hash, so the driver run IS their check)
+#      whose latest green row is >= 2 rounds older than the newest round;
+#   4. the verified tail, oldest green round first, so every key cycles
+#      back through the window.
+# Registry order breaks ties in every tier. Dropping a new
+# CORRECTNESS_r{N}.json next to this file re-rotates automatically.
 _SENTINEL = "flagship_pricing_summary"
 
-# Operators added in round 4 (and later), in DEFERRAL ORDER. Backlog
-# keys from earlier rounds must clear the window before brand-new ones:
-# a new key would otherwise enter the never-verified-with-oracle tier
-# ahead of the rows-only stragglers and push them past slot 50 for yet
-# another round. Deferred keys slot BETWEEN the never-verified backlog
-# and the already-verified tail, ordered by THIS tuple (not registry
-# import order) so earlier additions keep their window slots when more
-# are appended — with 37 backlog slots occupied this round, the first
-# 13 entries land inside the window and the rest queue for the next
-# rotation. Once a deferred key gets a green driver row it graduates to
-# the verified tail like any other; the list only matters while its
-# members are unverified.
-_DEFER_ORDER = (
-    "join_bloom_prefilter",
-    "agg_count_min",
-    "win_concurrent_intervals",
-    "fn_url_extract",
-    "llm_dedup_cc_bigstar",
-    "llm_dedup_weights",
-    "llm_contamination_ngram",
-    "llm_oov_rate",
-    "llm_sample_capped",
-    "llm_chunk_overlap",
-    "llm_embed_centroid_dist",
-    "join_point_in_time",
-    "llm_dedup_url",
-    # round-5 queue: outside this round's window (slots 51+), first in
-    # line after the current batch goes green
-    "join_asof_nearest",
-    "ts_change_points",
-    "llm_bpe_pair_counts",
-    "llm_corpus_stats",
-    "llm_emb_pca_power",
-    "llm_dedup_containment",
-    "llm_rank_fusion",
-    "llm_html_strip",
-    "ts_autocorr",
-    # round-5 additions: with the round-4 backlog verified, the window
-    # has ~40 free slots, so these land in the same round they ship
-    "llm_dedup_affine",
-    "llm_semdedup",
-    "llm_ngram_perplexity",
-    "llm_bpe_merge",
-    "llm_bpe_tokenize",
-    "llm_decontam_substring",
-    "llm_quality_calibrated",
-    "win_gaps_islands",
-    "llm_dedup_bottomk",
-    "llm_sim_pq",
-    "llm_emb_whiten",
-    "join_interval_bucketed",
-    "stream_transform_with_state",
-    "source_xml_roundtrip",
-    # round-5 late additions (same session): line-level dedup, DSIR
-    # importance weights, char entropy, triangle counting, seasonal
-    # decomposition — window has ~21 free slots, all five land
-    "llm_line_dedup",
-    "llm_dsir_weights",
-    "llm_char_entropy",
-    "graph_triangle_count",
-    "ts_seasonal_decompose",
-    "ts_ewma",
-    "llm_url_blocklist",
-    # round-5 second wave: sketches, robust stats, recursive SQL, and
-    # curation metrics — 13 ops; with the 30-key backlog these fill
-    # window slots 32-44, leaving 6 rotation slots for the verified tail
-    "sql_recursive_cte",
-    "join_asof_tolerance",
-    "agg_percentile_disc",
-    "agg_kmv_distinct",
-    "agg_kmv_union",
-    "llm_sample_weighted",
-    "llm_dedup_normalized",
-    "graph_kcore",
-    "llm_tokenizer_fertility",
-    "llm_ngram_novelty",
-    "llm_rouge_overlap",
-    "ts_sax",
-    "ts_theilsen_trend",
-    # round 7: the live COPY-protocol Postgres import (hash-checked
-    # end-to-end against a real scratch server), rolling robust
-    # quantiles, Brown's double-EWMA forecast, synchronous label
-    # propagation, and the fully hash-verified two-round Lloyd k-means
-    "sink_postgres_copy",
-    "win_sliding_quantiles",
-    "ts_double_ewma_forecast",
-    "graph_lpa_communities",
-    "llm_cluster_kmeans_exact",
-    "llm_dedup_editdist",
-    "spatial_geohash_join",
-    "llm_k_anonymity",
-    "ts_cross_correlation",
-    "udtf_lateral",
-    "agg_ols_by_group",
-    "llm_dedup_prefix_filter",
-    "graph_link_prediction",
-    "win_interval_coverage",
-    "ts_haar_energy",
-    "llm_split_kfold",
-    "graph_bfs_distance",
-    "ts_downsample_lttb",
-    "llm_collocations_pmi",
-    "llm_keyword_rake",
-    "spatial_knn_join",
-    "sort_pareto_skyline",
-    "ts_burst_detect",
-    "win_running_distinct",
-    "agg_welch_ttest",
-    "agg_benford",
-    "agg_chi2_independence",
-    "agg_market_concentration",
-    "spatial_dbscan_core",
-    "ts_max_drawdown",
-    "ts_spc_control_limits",
-    "agg_bootstrap_ci",
-    "graph_assortativity",
-    "ts_seasonality_profile",
-    "agg_rfm_segmentation",
-    "ts_cohort_ltv",
-    "llm_fingerprint_winnow",
-    "ts_path_transitions",
-    "agg_basket_affinity",
-    "agg_entropy_mix",
-    "ts_survival_hazard",
-    "ts_dwell_time",
-    "agg_ab_proportions_ztest",
-    "ts_peak_detect",
-    # round 8: scale-safe forms of the two r7 weak ops (per-shard
-    # systematic sampler; bucket-rank NTILE with no global sort)
-    "llm_sample_weighted_sharded",
-    "agg_rfm_rankcut",
-    # round 8 second wave (window slots 18-20; ~30 stale re-check slots
-    # remain behind them): rank-sum test, touch attribution, and the
-    # cross-source overlap matrix
-    "agg_mannwhitney_u",
-    "ts_attribution_touch",
-    "llm_source_overlap",
-    # round 11: the scale-safe sibling of llm_sim_pairs_lsh (round-10
-    # verdict item 2) — the window has free slots, lands same round
-    "llm_sim_pairs_lsh_capped",
-    # round 11 second wave: adaptive-k + LSH-bucketed-assignment
-    # SemDeDup (closes the §8.7 "silently drops nothing at scale"
-    # watch item on llm_semdedup), and the capped sibling of
-    # llm_dedup_embedding (the sf100 tranche's one workload-bound find,
-    # xlin_c 4.67 — same valve as llm_sim_pairs_lsh_capped)
-    "llm_semdedup_adaptive",
-    "llm_dedup_embedding_capped",
-)
-_DEFER_NEW = frozenset(_DEFER_ORDER)
-
-# Keys whose IMPLEMENTATION changed after their latest green driver row
-# (round-8 verdict item 1: "a green row for the old code is not a green
-# row for the shipped code"). Value = the round the change shipped; the
-# key preempts the stale-tier rotation (window tier 1, right after
-# sentinel/errored) until the driver re-confirms it in a round >= that
-# value, then graduates back to the verified tail automatically —
-# entries never need manual removal, and tests/test_driver_currency.py
-# fails the build if a suite diff since the newest CORRECTNESS file
-# isn't covered here.
-_FORCE_RECHECK: dict[str, int] = {
-    # round-8 rewrites whose driver rows predate the rewrite
-    "llm_emb_pca_power": 8,
-    "graph_triangle_count": 8,
-    # graph_kcore: r8 entry superseded by the r14 oracle rewrite below
-    # graph_bfs_distance / graph_lpa_communities: r8 entries superseded
-    # by the r14 substrate rewrites below (r15 ADVICE: comments instead
-    # of shadowed duplicate dict keys, which relied on last-binding-wins)
-    "graph_link_prediction": 8,
-    "llm_split_kfold": 8,
-    # round-9 changes (minhash cost cut + prefix-filter upgrades;
-    # integer threshold knobs; decimal-promoted rank-sum moments)
-    "spatial_dbscan_core": 9,
-    "agg_mannwhitney_u": 9,
-    # round-10 latent-correctness fix (round-9 ADVICE): the sorted-run
-    # regex now carries (?s) so the Unicode line separators that
-    # survive the ASCII-only \s+ strip stay countable. ASCII corpora
-    # (all driver SFs) are bit-identical; third consciously-spent
-    # stale slot this round — a judge-flagged correctness gap
-    # outranks the staleness count
-    "llm_char_entropy": 10,
-    # round-9 second wave: the 100x ladder caught the uncapped
-    # reference-set cardinality (refs grew with the corpus); capped at
-    # a fixed set, driver-SF outputs unchanged
-    "llm_rouge_overlap": 9,
-    # docstring-only scale note (Derby insert-wall diagnosis), but the
-    # currency guard is conservative by design — cheap re-check
-    "stream_jdbc_import": 9,
-    # round-10 full-registry ladder found the ONE key that DIED at
-    # sf10 (vocabulary-sized cap set picked for broadcast, 8 GB
-    # HashedRelation build OOM): both hash-keyed joins now carry
-    # SHUFFLE_HASH hints (operators/dedup.py
-    # bottomk_containment_pairs). Values identical, plan changed —
-    # re-check per the round-9 discipline, consciously spending one
-    # stale-tier slot (the round-9 verdict's ≤11 stale bar reads 12
-    # with this entry; a crash-at-scale fix outranks the count by 1)
-    "llm_dedup_bottomk": 10,
-    # round-10 1000x rung (sf100, new this round): the round-9 clamp
-    # raise (s<=12) saturated one decade later exactly as clamps do -
-    # n=100M wants s=15, xlin_c 2.51. Cap raised to 16 in BOTH
-    # engines' threshold chains; every n <= 20.5M (all driver SFs +
-    # sf1/sf10 rungs) keeps its grid bit-identically. Second
-    # consciously-spent stale slot this round, same reasoning.
-    "spatial_knn_join": 10,
-    # round-10 tranche 2d: join_bloom_prefilter's EXACT join carried a
-    # forced F.broadcast on the filtered-orders side — a corpus
-    # FRACTION (4.5M rows at sf100; xlin_c 1.36), violating the
-    # round's rule 1 and the operator's own documented degradation
-    # contract. Hint dropped: Catalyst auto-broadcasts at every driver
-    # SF (plan pins unchanged), AQE degrades to sort-merge at scale.
-    # Values identical, plan changed at scale only — fifth
-    # consciously-spent stale slot, same >1.2-gate reasoning.
-    "join_bloom_prefilter": 10,
-    # round-11 (verdict item 6): prefix_filter_jaccard_pairs_from_sets
-    # now enforces its set-semantics precondition with an internal
-    # F.array_distinct on the explode. Both suite callers already feed
-    # distinct arrays (the guard is a no-op scan for them; pinned by
-    # tests/test_round9_ops.py), so outputs are provably unchanged —
-    # but shared-helper edits are outside the currency guard's
-    # diff-span scope, so schedule the cheap re-checks explicitly.
-    "llm_dedup_prefix_filter": 11,
-    # round-11 multimodal oracle flip (verdict items 3 + 8): resize and
-    # frames gained their staged full-value oracles (decorator-only
-    # change — the tier-2 oracle-upgrade rotation would pull them in
-    # anyway; these entries make the currency guard's requirement
-    # explicit), and llm_multimodal's byte_entropy moved from numpy
-    # pairwise accumulation to the order-free decimal-grid contract
-    # (per-row double values CHANGED in the last printed decimals —
-    # the new oracle replicates the new contract exactly).
-    "llm_multimodal": 11,
-    "llm_multimodal_resize": 11,
-    "llm_multimodal_frames": 11,
-    # round-11 (round-10 ADVICE on the r10 bucketed rewrite): the CUSUM
-    # core is split out with a testable rows_per_bucket knob (nb>1 now
-    # pinned row-for-row vs the single-window form on a tied-score
-    # fixture), and the bucketed cumsum frame is localCheckpoint'ed —
-    # the measured sf1 plan showed ReuseExchange NOT firing, so the
-    # events scan + window sort ran twice at exactly the scale the
-    # path exists for. nb==1 (every driver SF) output is untouched;
-    # cheap re-check per the changed-code discipline.
-    "ts_change_points": 11,
-    # round-11 sf30-rung fix: the minhash exact-verify joins now carry
-    # distinct 60-bit md5-prefix INT arrays instead of shingle strings
-    # (operators/dedup.py _verify_hash_arr; oracles mirror via
-    # _HV1/_HV2), and parallelize() counts footer row groups so the
-    # fused minhash stage can't silently run #row-groups-wide. Set
-    # metrics identical absent 60-bit collisions; all four keys
-    # re-driven green at HEAD via tools/drive_entry.py — scheduled for
-    # driver confirmation per the changed-code discipline.
-    # (llm_dedup_near / graph_pagerank: r11 entries superseded by the
-    # r14 oracle rewrites below)
-    "llm_dedup_containment": 11,
-    "llm_dedup_affine": 11,
-    # round-11 fourth-tranche find: both daily-rollup window keys
-    # pre-repartitioned the RAW events by event_type (|series| is
-    # CONSTANT, so the heavy aggregate ran |series|-wide at every
-    # scale; win_pct_change read xlin_c 2.27 at sf100). The
-    # repartition is dropped — the aggregate partial-combines at scan
-    # parallelism and only the tiny daily rollup crosses the window's
-    # exchange. Values identical (exact_sum is order-free decimal);
-    # post-fix xlin_c 0.26 / 0.25; re-driven green at HEAD.
-    "win_pct_change": 11,
-    "win_moving_zscore": 11,
-    # round-12 (round-11 ADVICE): the two O(n) frames in
-    # llm_semdedup_adaptive (orphan anti-join side, final drops side)
-    # lose their F.broadcast hints — a forced broadcast of ~one row
-    # per input vector collects multi-GB to the driver at exactly the
-    # scale the key exists for; AQE now picks the strategy. The n-row
-    # vec localCheckpoint also went lazy (plan-only callers pay no
-    # job). Values identical at every SF; re-driven green at HEAD.
-    # (bumped 12 → 14: the r14 assignment/allv checkpoints below)
-    "llm_semdedup_adaptive": 14,
-    # round-12 census find (the third decade catching its third
-    # defect): both keys' moment products multiplied in BIGINT and
-    # threw ANSI ARITHMETIC_OVERFLOW at sf100 — hourly cents totals
-    # grow with corpus density while the hour count stays fixed, so
-    # SUM(y*y) exceeds 2^63 one decade past the driver SFs. Operands
-    # now promote to decimal BEFORE the multiply (oracles mirror via
-    # HUGEINT products); identical integers wherever the old form
-    # didn't throw, cross-engine-pinned in the overflow regime by
-    # tests/test_round12_ops.py. Re-driven green at HEAD.
-    "agg_ols_by_group": 12,
-    "ts_cross_correlation": 12,
-    # round-13 (round-12 verdict item 2): ts_autocorr was the live
-    # instance of the gate's cast-wrapped blind spot — F.sum(dec(c*c))
-    # multiplied in BIGINT and cast the already-computed product.
-    # Operands now promote to decimal(19,0) BEFORE the multiply (the
-    # ts_cross_correlation form); values identical wherever the old
-    # form didn't throw (exact integer arithmetic either way), oracle
-    # unchanged. Re-driven green at HEAD.
-    "ts_autocorr": 13,
-    # round-13 sf0.001 parity-sweep find: h=3 OR-tables left a ~3e-4
-    # per-pair recall miss to the dice and the sweep caught one (a
-    # J=0.9333 pair missed all 3 seed-42 tables at sf0.001). Base
-    # table count raised to the wide regime's measured 4 — output-
-    # monotone (more OR-tables only add candidates; flags already
-    # TRUE stay TRUE), re-swept green at sf0.001/sf0.01/sf0.1.
-    "llm_dedup_minhash_mllib": 13,
-    # round-13 sf1 parity-sweep finds (both invisible at driver SFs):
-    # agg_stats' rounded corr prints a SIGNED zero whose sign is
-    # double-accumulation noise (one engine 0.0, the other -0.0 on the
-    # replica fixture) — both sides now add +0.0 after the round;
-    # limit_probe's two-key sort prefix is not total on a fixture with
-    # duplicated keys — the ORDER BY now covers all projected columns
-    # (identical rows at every real SF, where the prefix is unique).
-    "agg_stats": 13,
-    "limit_probe": 13,
-    # round-13 sf1 sweep, second signed-zero instance (SURVEY
-    # §7.4.10): 3 replica docs' log-ratios cancel exactly and the
-    # rounded avg_llr reads 0.0 in Spark vs -0.0 in DuckDB; both
-    # sides now add +0.0 after the round.
-    "llm_dsir_weights": 13,
-    # round-14 (round-13 verdict item 5): bounded-memory ORACLE
-    # rewrites for the three oracle-walled quadratic keys — Spark
-    # sides untouched. llm_dedup_near/graph_pagerank: the shared LSH
-    # candidate SQL hoisted the 60-bit verify arrays to a per-doc
-    # MATERIALIZED CTE instead of re-hashing both gram string arrays
-    # per candidate-pair group (the round-13 sf03 DuckDB OOM);
-    # graph_kcore: every peel round's CTE is MATERIALIZED so the
-    # chain can't be inlined multiplicatively (the round-13 sf0.1
-    # disk wall). Values identical by construction; re-driven green
-    # at HEAD and re-swept over-gate (PARITY.json r14 rows).
-    "llm_dedup_near": 14,
-    # graph_pagerank: r14 entry superseded by the r15 loop rewrite below
-    "graph_kcore": 14,
-    # round-14 OPTIMIZATION round: result-preserving plan restructures,
-    # re-driven green at HEAD (tools/drive_entry.py) and re-swept
-    # over-gate at sf0.1 (PARITY.json r14 rows) — scheduled for driver
-    # confirmation per the changed-code discipline. Three change
-    # classes (OPTIMIZATION_r14.md):
-    # (1) materialize-once checkpoints for frames read by 2-4 plan
-    #     branches (the shingle/digest tables, BM25 scores + tf,
-    #     semdedup assignment, contamination fingerprints, KMV
-    #     sketches, line_dedup segments, perplexity bigrams);
-    # (2) single-exchange window markers replacing groupBy+join-back
-    #     two-branch shapes (span stats, decontam membership);
-    # (3) 60-bit md5-prefix BIGINT gram digests on BOTH engine and
-    #     oracle (contamination_ngram, decontam_substring — the r11
-    #     _verify_hash_arr convention, ~4x lighter exchanges).
-    "llm_semdedup": 14,
-    "llm_rank_fusion": 14,
-    "llm_sim_rerank": 14,
-    "llm_index_bm25": 14,
-    "llm_contamination": 14,
-    "llm_contamination_ngram": 14,
-    "llm_ngram_perplexity": 14,
-    "llm_decontam_substring": 14,
-    "agg_kmv_union": 14,
-    "llm_line_dedup": 14,
-    "llm_dedup_affine": 14,
-    "llm_dedup_containment": 14,
-    "llm_contamination_near": 14,
-    "llm_dedup_span": 14,
-    "llm_dedup_clusters": 14,
-    "llm_dedup_cc_bigstar": 14,
-    # scratch-server durability opts only (COPY path; live read-back
-    # unchanged) — conservative re-check like stream_jdbc_import r9
-    "sink_postgres_copy": 14,
-    # round-14 batches 4-5 (second session): the four graph keys moved
-    # off their inline self-join edge builds onto the shared
-    # _supplier_sigma_edges substrate (identical edge output; oracles
-    # stay the independent self-join SQL — the graph_triangle_count
-    # precedent), LPA additionally cuts lineage on rounds 1..n-1
-    # labels; the two partitioned writes cluster on the partition
-    # column before partitionBy (read-back result unchanged). All six
-    # re-driven green at HEAD and the five oracle-bearing sf0.1 keys
-    # re-swept over-gate (PARITY.json r14 rows). graph_bfs_distance /
-    # graph_lpa_communities / graph_assortativity re-list their r8
-    # entries at 14 (last binding wins — the r8 rows already
-    # graduated).
-    "graph_bfs_distance": 14,
-    "graph_lpa_communities": 14,
-    "graph_assortativity": 14,
-    "llm_index_inverted": 14,
-    "sink_partitioned_parquet": 14,
-    # round-15 OPTIMIZATION round: graph_pagerank's loop is now the
-    # single-exchange round (operators/graph.py) — the dangling mass
-    # rides the contribution shuffle as the NULL-node sentinel group
-    # and the per-node base rows ride it as presence messages, so the
-    # per-round dedicated dangling aggregate + base-side join are gone
-    # (93 -> 63 driver jobs per run). Float contract preserved
-    # expression by expression (identical decimal-sum-snap; verified
-    # value-hash-identical to the old loop at sf0.1 before shipping);
-    # oracle unchanged; re-driven green at HEAD and re-swept over-gate
-    # at sf0.1 (PARITY.json r15 row).
-    "graph_pagerank": 15,
-    # round-15: MLlib KMeans.fit replaced by the hand-rolled 2-round
-    # Lloyd loop (operators/similarity.kmeans_centroids) with
-    # decimal-exact 6-dp-snapped centers — recall per fixture becomes a
-    # code constant (the MLlib centers were reduction-order-dependent
-    # with a 7/10 margin over the >=6 oracle bound at sf0.1); probe
-    # depth 6 -> 8 of 16 for margin. Output (exact top-10 + recall
-    # flag) unchanged; re-driven green at HEAD, sf0.1 parity re-swept.
-    "llm_sim_ivf_kmeans": 15,
-}
-# Round-13 window arithmetic (verified against _driver_order() at
-# HEAD): 50 slots = sentinel + 5 forced re-checks (ts_autocorr, the
-# overflow-gate fix; llm_dedup_minhash_mllib, the h=4 recall fix;
-# agg_stats / limit_probe / llm_dsir_weights, the sf1-sweep
-# signed-zero and total-order fixes) + 1 rows-only rotation
-# (sink_postgis via the standing 2-round cadence above, last ran
-# r10) + 43 stale slots = ALL 19 r6-vintage keys + the 24 oldest r7
-# keys. This leaves zero keys with a latest row < r7 after the
-# round-13 driver run — the round-12 verdict item 3 target — and 15
-# r7 keys for round 14's rotation to clear.
+# Keys whose implementation changed after their latest green driver row,
+# mapped to the round the change shipped: a green row for the old code
+# is not a green row for the shipped code. Each entry puts its key in
+# tier 2 until the driver records a green row in a round >= that value,
+# then the key graduates to the verified tail by itself, so entries never
+# need manual removal. tests/test_driver_currency.py fails the build if a
+# suite diff since the newest CORRECTNESS file is not covered here.
+_FORCE_RECHECK: dict[str, int] = {}
 
 
 def _driver_latest(root: str | None = None) -> dict[str, tuple[int, dict]]:
@@ -473,109 +74,34 @@ def _driver_latest(root: str | None = None) -> dict[str, tuple[int, dict]]:
 
 
 def _green(row: dict) -> bool:
+    """A hash-matched row, or a rows-only row that ran (err == "no_oracle"
+    with a row count). Anything else — an error or a hash/rows/schema
+    mismatch — is not green."""
     ran_rows_only = (
         row.get("err") == "no_oracle" and row.get("spark_rows") is not None
     )
     return row.get("hash_match") is True or ran_rows_only
 
 
-def _driver_history(root: str | None = None) -> tuple[frozenset, frozenset]:
-    """(verified, errored) query keys across all CORRECTNESS_r*.json.
-
-    Both sets are decided by each key's LATEST recorded row, so a
-    regression (a once-green key whose newest row errors or
-    hash-mismatches) re-enters the priority tier instead of staying
-    "verified" forever. verified = latest row is hash-green, or a
-    rows-only row that ran (err == "no_oracle" with a row count).
-    errored = latest row is anything else — a real error OR a
-    hash/rows/schema mismatch — re-prioritized until green again.
-    """
-    latest = _driver_latest(root)
-    verified = {key for key, (_, row) in latest.items() if _green(row)}
-    errored = {key for key, (_, row) in latest.items() if not _green(row)}
-    return frozenset(verified), frozenset(errored)
-
-
-def _oracle_upgraded(root: str | None = None) -> frozenset:
-    """Keys whose latest driver row ran rows-only (err == "no_oracle")
-    but which NOW carry a DuckDB oracle: the oracle landed after the
-    driver last saw the key, so its hash has been proven locally but
-    never driver-confirmed. These rank with the never-verified-oracle
-    tier — six hash-green driver rows is the whole difference between
-    "locally proven" and "driver-proven" (round-5 verdict, item #2)."""
-    from parquet_importer_spark.suite import ORACLES  # noqa: PLC0415
-
-    latest = _driver_latest(root)
-    return frozenset(
-        key
-        for key, (_, row) in latest.items()
-        if row.get("err") == "no_oracle"
-        and row.get("spark_rows") is not None
-        and key in ORACLES
-    )
-
-
 def _driver_order(root: str | None = None) -> list[str]:
-    from parquet_importer_spark.suite import ORACLES, QUERIES  # noqa: PLC0415
+    from parquet_importer_spark.suite import QUERIES  # noqa: PLC0415
 
     latest = _driver_latest(root)
-    verified = {k for k, (_, row) in latest.items() if _green(row)}
-    errored = {k for k, (_, row) in latest.items() if not _green(row)}
-    upgraded = _oracle_upgraded(root)
-    # Rows-only keys are the one tier whose health the local harness
-    # cannot fully prove (no oracle hash — their check IS the driver
-    # run), so they re-confirm on a standing 2-round cadence instead of
-    # competing with the hash-verified tail (round-12 verdict item 3:
-    # sink_postgis, the single rows-only key, had not rotated since
-    # r10). Ranked with the upgraded tier, ahead of the stale rotation.
     newest = max((rnd for rnd, _ in latest.values()), default=0)
-    rows_only_due = {
-        k
-        for k, (rnd, row) in latest.items()
-        if _green(row)
-        and row.get("err") == "no_oracle"
-        and rnd <= newest - 2
-    }
-
-    def forced(name: str) -> bool:
-        # code changed in round _FORCE_RECHECK[name]; driver hasn't
-        # re-confirmed since → must re-enter the window ahead of the
-        # stale rotation until a green row at/after that round lands
-        return (
-            name in _FORCE_RECHECK
-            and name in verified
-            and latest[name][0] < _FORCE_RECHECK[name]
-        )
-
-    def tier(name: str) -> int:
-        if name == _SENTINEL or name in errored:
-            return 0
-        if forced(name):
-            return 1
-        if name in upgraded or name in rows_only_due:
-            return 2
-        if name in verified:
-            return 5
-        if name in _DEFER_NEW:
-            return 4
-        return 2 if name in ORACLES else 3
-
-    names = list(QUERIES)
+    forced = list(_FORCE_RECHECK)
 
     def rank(name: str) -> tuple[int, int]:
-        # tier 4 orders by the deferral list; the verified tail (tier 5)
-        # is staleness-ordered — oldest green round first — so keys last
-        # checked in r1/r2 re-enter the window before recently-confirmed
-        # ones; other tiers keep registry order
-        if forced(name):
-            return (0, list(_FORCE_RECHECK).index(name))
-        if name in _DEFER_NEW and name not in verified and name not in errored:
-            return (0, _DEFER_ORDER.index(name))
-        if tier(name) == 5:
-            return (latest[name][0], names.index(name))
-        return (0, names.index(name))
+        rnd, row = latest.get(name, (0, None))
+        if name == _SENTINEL or row is None or not _green(row):
+            return (1, 0)
+        if rnd < _FORCE_RECHECK.get(name, 0):
+            return (2, forced.index(name))
+        if row.get("err") == "no_oracle" and rnd <= newest - 2:
+            return (3, 0)
+        return (4, rnd)
 
-    return sorted(names, key=lambda n: (tier(n), rank(n)))
+    # sorted() is stable, so registry order breaks ties within a tier
+    return sorted(QUERIES, key=rank)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -373,15 +373,14 @@ def main() -> None:
             k: sf1_spot[k] for k in ("n", "max_xlin", "worst")
         }
     elif sf == 0.1:
-        # r14 verdict item 9: two r14 runs silently lost the sf1 spot
-        # when the replica fixture was absent — make the skip explicit
-        # instead of dropping the key, so a fixture-less run is
-        # distinguishable from a never-attempted one.
-        out["sf1_spot"] = (
-            "SKIPPED - fixture missing (tools/make_scale_fixture.py)"
+        # an explicit skip instead of a dropped key, so a fixture-less
+        # run is distinguishable from a never-attempted one; always a
+        # dict, so the field's type does not change between runs
+        out["sf1_spot"] = {
+            "skipped": "fixture missing (tools/make_scale_fixture.py)"
             if not os.path.isdir(sf1_dir)
-            else "SKIPPED - no xlin samples (see errors)"
-        )
+            else "no xlin samples (see errors)"
+        }
     if errors:
         # names only in the compact line — full messages would blow the
         # length budget right when the driver most needs a parseable
@@ -392,7 +391,7 @@ def main() -> None:
     # serial_plans grew the round-2/3 stdout line past that window
     # (BENCH_r02/r03 "parsed": null). The final stdout line is the
     # compact result JSON alone; tests/test_driver_order.py pins its
-    # length under 1800 chars for the current headline.
+    # length under 1860 chars for the current headline.
     detail = {
         "n_queries": len(timings),
         "sec_per_query": round(
@@ -403,54 +402,7 @@ def main() -> None:
         "serial_plans": sorted(
             q for q, p in partitions.items() if p["max"] <= 1
         ),
-        "serial_plan_note": (
-            "max<=1 at small SF usually reflects the single-row-group "
-            "input floor (SURVEY §8.1), not an inherently serial plan; "
-            "watch this list for round-over-round regressions"
-        ),
         "unstable_runs": unstable,
-        "r12_movers_adjudication": (
-            "the 6 round-12 vs_ref_movers (bottomk 1.52x, containment "
-            "1.47x, prefix_filter 1.35x, ts_sessionize 1.32x, embedding "
-            "1.30x, line_dedup 1.26x) were ambient: a round-13 exclusive "
-            "re-run (start load1 0.11, sentinel dr 0.91) cleared "
-            "containment/ts_sessionize/embedding/line_dedup outright and "
-            "two tools/bench_family.py re-measures cleared bottomk "
-            "(1.18x) and prefix_filter (1.21x) at their minima while the "
-            "same keys read 1.63x/1.31x minutes apart on an idle box - "
-            "+-35% swing with byte-stable plan pins and untouched code. "
-            "llm_sim_topk read 1.26-1.47x across all three runs but the "
-            "absolute delta is 0.07-0.13 s on a 0.28 s key (floor "
-            "regime, plan pin stable: 2 exchanges, BNLJ+TakeOrdered, "
-            "code untouched since r7); the r11 reference value is "
-            "itself a session minimum - not a structural regression"
-        ),
-        "r14_ref_recut_adjudication": (
-            "BENCH_REF re-cut round 14 from run 1 of three back-to-back "
-            "exclusive runs at HEAD (47.58 / 46.13 / 52.48 s; run-1 "
-            "start load1 0.09; run-3 sentinel drifted to 2.0 - the "
-            "host's known monotone within-session decay; full per-query "
-            "numbers in BENCH_CLEAN_r14.json). This settles the two "
-            "keys the r13 verdict left open: llm_bpe_merge read 0.704 s "
-            "at its session minimum vs the old ref 0.73 (0.96x - "
-            "ambient, cleared outright) and llm_dedup_bottomk's "
-            "stuck-at-1.18x minimum was an artifact of the r11 ref "
-            "value being itself a floor-regime session minimum (1.176 s "
-            "on a key untouched since r10 with byte-stable plan pins); "
-            "vs the re-cut reference a same-round exclusive "
-            "bench_family run reads bottomk 1.13x and bpe_merge 1.22x "
-            "(abs delta 0.2 s, in-session min 0.74x) - both <1.2x at "
-            "minimum, no structural regression"
-        ),
-        "r8_regression_rootcause": (
-            "llm_pipeline_e2e's r8 +28% (verdict item 6) was ambient "
-            "load, not plan growth: its plan pin (4 exchanges, Window) "
-            "is byte-stable across r7-r9, and a round-9 re-measure put "
-            "it at 1.05x BENCH_REF while a co-loaded run shifted the "
-            "regression to entirely different keys (llm_dedup_near "
-            "2.05x) - the signature of scheduler contention, which the "
-            "ambient/sentinel markers in this record exist to flag"
-        ),
         "ambient_start": amb_start,
         "ambient_end": amb_end,
         "sentinel": {"first": sent_first, "last": sent_last},
@@ -459,16 +411,6 @@ def main() -> None:
         # combined output, so the per-query scale factors survive even
         # when the head of this detail line is truncated
         "sf1_xlin": sf1_spot.get("xlin", {}),
-        "bench_ref_provenance": (
-            "BENCH_REF.json refreshed round 14 from run 1 of three "
-            "exclusive same-code runs at HEAD (see "
-            "r14_ref_recut_adjudication and BENCH_CLEAN_r14.json; "
-            "supersedes the round-11 record, which the r13 verdict "
-            "called the stalest artifact in the timing chain). History: "
-            "r11 superseded r10, which superseded r8 after the round-9 "
-            "structural speedups; the r12 headline ran co-loaded and "
-            "its 6 movers were adjudicated ambient in r13"
-        ),
     }
     print(json.dumps(detail), file=sys.stderr)
     # The driver keeps only the last 2000 chars of combined output, so

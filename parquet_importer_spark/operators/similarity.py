@@ -465,6 +465,8 @@ def kmeans_centroids(
       partitioning, like MLlib's seeded sampling.
 
     An empty cluster keeps its previous center (MLlib does the same).
+    k clamps to the corpus size: fewer than ``n_centroids`` rows yield
+    one center per row, and an empty corpus yields an empty frame.
     Unlike MLlib's fit, the centers are REPRODUCIBLE across
     partitionings and core counts: every per-dimension mean accumulates
     in DECIMAL(30,8) and snaps to the 6-dp grid (the
@@ -491,7 +493,7 @@ def kmeans_centroids(
         [round(float(x), 6) for x in r.cvec] for r in init
     ]
     dim = len(centers[0]) if centers else 0
-    for _ in range(max_iter):
+    for _ in range(max_iter if centers else 0):
         # centers travel as ONE broadcast row holding an
         # array<array<double>> — a plan-literal k×dim array was measured
         # planning/codegen-bound (seconds per round at 500 rows), while
@@ -533,7 +535,7 @@ def kmeans_centroids(
             .collect()
         )
         got = {r.cid: [r[f"m{i}"] for i in range(dim)] for r in rows}
-        centers = [got.get(i, centers[i]) for i in range(n_centroids)]
+        centers = [got.get(i, centers[i]) for i in range(len(centers))]
     return spark.createDataFrame(
         list(enumerate(centers)), "cid int, cvec array<double>"
     )

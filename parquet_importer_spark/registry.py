@@ -10,6 +10,13 @@ order-insensitive value hash), so:
 - floating aggregates go through :func:`exact_sum` (decimal-exact
   accumulation, then cast to double) or are rounded identically,
   because double summation order differs between engines (SURVEY.md §7.4.1).
+
+Registration order is registry order. The driver checks only the first 50
+keys per round, so ``__spark_entry__`` reorders the registry from the
+recorded CORRECTNESS_r*.json history: the sentinel plus errored or
+never-checked keys, then forced re-checks, then rows-only keys due on a
+2-round cadence, then the verified tail, oldest green round first.
+Registry order breaks ties within each tier.
 """
 
 from __future__ import annotations

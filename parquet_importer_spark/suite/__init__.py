@@ -5,12 +5,10 @@ with every implemented operator from SURVEY.md §2. Each submodule covers
 one inventory section.
 """
 
-# Import order IS registry order, and the driver's correctness window
-# truncates at 50 entries — families unverified in round 1 register first
-# (windows → relational → streaming/ts → llm_text → llm_similarity →
-# llm_sampling → scans → sinks → udf), round-1-green families last.
-# __spark_entry__._driver_order() further tiers oracle-bearing entries
-# ahead of rows-only ones within the unchecked set.
+# Import order IS registry order. The driver's correctness window
+# truncates at 50 entries; __spark_entry__._driver_order() picks which
+# keys fill it from the recorded driver history, and registry order only
+# breaks ties within each of its tiers.
 from parquet_importer_spark.suite import (  # noqa: F401
     windows,
     relational,

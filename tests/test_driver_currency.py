@@ -289,9 +289,9 @@ def test_changed_queries_are_scheduled_for_recheck():
             continue  # prose changed, behavior didn't: row still current
         # this key's implementation changed since round `rnd` recorded
         if key not in latest:
-            continue  # never driver-checked: already in the priority tier
+            continue  # never driver-checked: already in tier 1
         if not entry._green(latest[key][1]):
-            continue  # errored latest row: already tier 0
+            continue  # errored latest row: already in tier 1
         if _new_key_is_current(_known_rounds(key), rnd):
             continue  # born after the diff base: green row postdates creation
         # An entry EQUAL to the key's latest green round is SATISFIED,

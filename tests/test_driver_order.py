@@ -1,7 +1,9 @@
 """The driver verifies only the first 50 registry keys per round, so
 __spark_entry__ rotates the window from recorded CORRECTNESS_r*.json
-history: never-verified oracle-bearing keys first, verified keys last,
-errored keys re-prioritized until green. Pure-Python logic — no Spark."""
+history in four tiers: the sentinel plus every key that is errored or
+has no driver row, then forced re-checks, then rows-only keys due on
+their 2-round cadence, then the verified tail oldest-green-round first.
+Pure-Python logic — no Spark."""
 
 from __future__ import annotations
 
@@ -12,34 +14,59 @@ import os
 import pytest
 
 WINDOW = 50
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _history(entry, root=None):
+    """(verified, errored) keys, each decided by its LATEST driver row."""
+    latest = entry._driver_latest(root)
+    verified = {k for k, (_, row) in latest.items() if entry._green(row)}
+    return verified, set(latest) - verified
 
 
 @pytest.fixture(scope="module")
 def entry():
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "__spark_entry__.py"),
+        "spark_entry_under_test", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
+def test_order_pinned_to_r15_history(entry, tmp_path):
+    """The window order over the committed r01-r15 driver history is
+    pinned by digest, so any rewrite of the rotation rule must keep
+    queries() and oracle_sql() byte-identical in order."""
+    import hashlib
+    import shutil
+
+    from parquet_importer_spark.suite import ORACLES
+
+    for rnd in range(1, 16):
+        shutil.copy(os.path.join(REPO, f"CORRECTNESS_r{rnd:02d}.json"), tmp_path)
+    order = entry._driver_order(str(tmp_path))
+
+    def digest(keys):
+        return hashlib.sha256(json.dumps(keys).encode()).hexdigest()
+
+    assert digest(order) == (
+        "c4be4e99c6377640ddd83c010bf03edb7791f5352e3aea05adead74be1fd701c"
+    )
+    assert digest([k for k in order if k in ORACLES]) == (
+        "1542cae5d08cefe4f57c00dc7d86e7eca4a0e5f22ee8986d13fadad1a4456b9e"
+    )
+
+
 def test_current_window_prioritizes_unverified_oracles(entry):
     from parquet_importer_spark.suite import ORACLES, QUERIES
 
-    verified, errored = entry._driver_history()
+    verified, errored = _history(entry)
     order = entry._driver_order()
     assert sorted(order) == sorted(QUERIES), "rotation must not drop keys"
     window = set(order[:WINDOW])
     # every key the driver has never verified and CAN hash-check must not
     # be displaced by an already-verified key (sentinel/errored excepted).
-    # Oracle-upgraded keys are verified-rows-only keys re-promoted INTO
-    # the window so the driver hash-confirms their new oracle — they are
-    # priority work, not displacement (same carve-out as the deferral and
-    # staleness tests below).
-    upgraded = entry._oracle_upgraded()
     unverified_oracle = {
         k for k in QUERIES if k not in verified and k in ORACLES
     }
@@ -48,7 +75,6 @@ def test_current_window_prioritizes_unverified_oracles(entry):
         if k in verified
         and k != entry._SENTINEL
         and k not in errored
-        and k not in upgraded
     }
     spill = unverified_oracle - window
     assert not (displaced and spill), (
@@ -58,7 +84,7 @@ def test_current_window_prioritizes_unverified_oracles(entry):
 
 
 def test_history_parses_round_files(entry):
-    verified, errored = entry._driver_history()
+    verified, errored = _history(entry)
     assert "agg_groupby" in verified  # hash-green in round 1
     assert "llm_dedup_minhash_mllib" in verified  # rows-only, ran
     # crashed the canonicalizer in r01, fixed (scalar columns) and
@@ -80,10 +106,10 @@ def test_rotation_advances_with_new_round(entry, tmp_path):
         "d": {"err": "TypeError: ...", "spark_rows": None},
     }
     (tmp_path / "CORRECTNESS_r97.json").write_text(json.dumps(r1))
-    verified, errored = entry._driver_history(str(tmp_path))
+    verified, errored = _history(entry, str(tmp_path))
     assert verified == {"a", "b"} and errored == {"c"}
     (tmp_path / "CORRECTNESS_r98.json").write_text(json.dumps(r2))
-    verified, errored = entry._driver_history(str(tmp_path))
+    verified, errored = _history(entry, str(tmp_path))
     assert "c" in verified, "later green row clears the error"
     assert errored == {"d"}
 
@@ -97,7 +123,7 @@ def test_error_then_no_rerun_stays_prioritized(entry, tmp_path):
     (tmp_path / "CORRECTNESS_r98.json").write_text(
         json.dumps({"y": {"hash_match": True, "err": None, "spark_rows": 1}})
     )
-    verified, errored = entry._driver_history(str(tmp_path))
+    verified, errored = _history(entry, str(tmp_path))
     assert errored == {"x"} and verified == {"y"}
 
 
@@ -134,51 +160,15 @@ def test_queries_and_oracles_consistent(entry):
     )
 
 
-def test_new_round_keys_defer_to_backlog(entry, monkeypatch):
-    """A key listed in _DEFER_NEW must sort AFTER every never-verified
-    backlog key (oracle or rows-only) and BEFORE the verified tail —
-    new additions must not push the pre-existing backlog out of the
-    driver's 50-slot window."""
-    from parquet_importer_spark.suite import ORACLES, QUERIES
-
-    verified, _ = entry._driver_history()
-    # oracle-upgraded keys are verified-rows-only keys re-promoted to
-    # the priority tier; they are not part of the verified TAIL
-    upgraded = entry._oracle_upgraded()
-    backlog = [k for k in QUERIES if k not in verified and k != entry._SENTINEL]
-    deferred = {k for k in backlog if k in entry._DEFER_NEW}
-    if not deferred:
-        pytest.skip("no deferred keys this round")
-    order = entry._driver_order()
-    pos = {k: i for i, k in enumerate(order)}
-    non_deferred = [k for k in backlog if k not in deferred]
-    if not non_deferred:
-        pytest.skip("entire backlog is deferred keys; ordering is trivial")
-    last_backlog = max(pos[k] for k in non_deferred)
-    first_verified = min(
-        (
-            pos[k]
-            for k in order
-            if k in verified and k != entry._SENTINEL and k not in upgraded
-        ),
-        default=len(order),
-    )
-    for k in deferred:
-        assert last_backlog < pos[k] < first_verified, (
-            f"deferred key {k} at {pos[k]} must sit between the backlog "
-            f"(ends {last_backlog}) and the verified tail "
-            f"(starts {first_verified})"
-        )
-
-
 def test_bench_stdout_line_fits_driver_capture():
     """The driver keeps only the LAST 2000 chars of bench.py stdout and
     JSON-parses them; rounds 2-3 lost the BENCH metric ("parsed": null)
     when diagnostics grew the single output line past that window. The
     compact result line — metric/value/unit/fixture/queries/sf with a
     worst-case timing per headline query — must stay comfortably inside
-    the capture (<1800 chars leaves headroom; n_queries/sec_per_query
-    are derivable and live in the stderr detail record)."""
+    the capture (<1860 chars leaves headroom; n_queries/sec_per_query
+    are derivable and live in the stderr detail record). sf1_spot is
+    always a dict: the xlin summary, or {"skipped": reason}."""
     import bench
 
     worst = {
@@ -199,58 +189,25 @@ def test_bench_stdout_line_fits_driver_capture():
         # r15: the sentinel designations are names-only (timings stay
         # in `queries`); the worst-case line must absorb the list
         "sentinels": list(bench.SENTINEL_KEYS),
-        "sf1_spot": {
-            "n": 10,
-            "max_xlin": 999.99,
-            "worst": max(bench.HEADLINE, key=len),
-        },
         "ambient": {
             "dr": 99.99,
             "busy": 100.0,
             "mv": 99,
         },
     }
-    line = json.dumps(worst)
-    # 1860 since r15 (was 1800): the sentinels designation adds ~75
-    # fixed chars; the driver capture is 2000, so 140 chars of headroom
-    # remain for the truncation-side margin.
-    assert len(line) < 1860, (
-        f"bench stdout line is {len(line)} chars; trim the headline or "
-        "shorten query ids so the driver's 2000-char tail capture parses"
+    spots = (
+        {"n": 10, "max_xlin": 999.99, "worst": max(bench.HEADLINE, key=len)},
+        {"skipped": "fixture missing (tools/make_scale_fixture.py)"},
     )
-
-
-def test_oracle_upgraded_keys_enter_window(entry):
-    """A key whose latest driver row was rows-only (err == "no_oracle")
-    but which NOW carries an oracle must rank in the priority tier —
-    inside the 50-slot window — so the driver hash-confirms it instead
-    of treating the stale rows-only row as 'verified' forever (round-5
-    verdict, What's wrong #2)."""
-    upgraded = entry._oracle_upgraded()
-    if not upgraded:
-        pytest.skip("no oracle-upgraded keys this round")
-    order = entry._driver_order()
-    pos = {k: i for i, k in enumerate(order)}
-    for k in upgraded:
-        assert pos[k] < WINDOW, (
-            f"oracle-upgraded key {k} at slot {pos[k]} is outside the "
-            f"driver's {WINDOW}-slot window"
+    for spot in spots:
+        line = json.dumps({**worst, "sf1_spot": spot})
+        # 1860 since r15 (was 1800): the sentinels designation adds ~75
+        # fixed chars; the driver capture is 2000, so 140 chars of
+        # headroom remain for the truncation-side margin.
+        assert len(line) < 1860, (
+            f"bench stdout line is {len(line)} chars; trim the headline or "
+            "shorten query ids so the driver's 2000-char tail capture parses"
         )
-
-
-def test_oracle_upgraded_detection(entry, tmp_path):
-    """Synthetic history: a rows-only row for a key that has an oracle
-    registers as upgraded; a hash-green row does not."""
-    from parquet_importer_spark.suite import ORACLES
-
-    with_oracle = next(iter(ORACLES))
-    other = next(k for k in ORACLES if k != with_oracle)
-    (tmp_path / "CORRECTNESS_r97.json").write_text(json.dumps({
-        with_oracle: {"err": "no_oracle", "spark_rows": 7},
-        other: {"hash_match": True, "err": None, "spark_rows": 3},
-    }))
-    upgraded = entry._oracle_upgraded(str(tmp_path))
-    assert with_oracle in upgraded and other not in upgraded
 
 
 def test_rows_only_keys_reenter_on_cadence(entry, tmp_path):
@@ -323,8 +280,7 @@ def test_verified_tail_is_staleness_ordered(entry):
     cycle back through the window instead of the same early-registry
     keys being re-checked every round (round-5 verdict, item #3)."""
     latest = entry._driver_latest()
-    verified, errored = entry._driver_history()
-    upgraded = entry._oracle_upgraded()
+    verified, errored = _history(entry)
     order = entry._driver_order()
     tail = [
         k
@@ -332,7 +288,6 @@ def test_verified_tail_is_staleness_ordered(entry):
         if k in verified
         and k != entry._SENTINEL
         and k not in errored
-        and k not in upgraded
         # force-recheck keys (code changed after their green row) jump
         # ahead of the stale rotation by design — not part of the tail
         and not (
@@ -340,7 +295,7 @@ def test_verified_tail_is_staleness_ordered(entry):
             and latest[k][0] < entry._FORCE_RECHECK[k]
         )
         # rows-only keys on their standing 2-round re-confirmation
-        # cadence rank with the upgraded tier — not part of the tail
+        # cadence rank in their own tier — not part of the tail
         and not (
             latest[k][1].get("err") == "no_oracle"
             and latest[k][0]
@@ -353,6 +308,32 @@ def test_verified_tail_is_staleness_ordered(entry):
     )
     if len(set(rounds)) > 1:
         assert rounds[0] < rounds[-1]
+
+
+def test_unrecorded_key_ranks_in_first_tier(entry, tmp_path, monkeypatch):
+    """A registered key with no driver row at all ranks with the sentinel
+    in tier 1, ahead of forced re-checks and of the stalest verified
+    keys."""
+    from parquet_importer_spark.suite import QUERIES
+
+    names = [k for k in QUERIES if k != entry._SENTINEL]
+    unrecorded, forced = names[-1], names[-2]
+    stale, fresh = names[:WINDOW], names[WINDOW:-1]
+    green = {"hash_match": True, "err": None, "spark_rows": 3}
+    (tmp_path / "CORRECTNESS_r97.json").write_text(json.dumps(
+        {k: green for k in stale}
+    ))
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(
+        {k: green for k in [entry._SENTINEL, *fresh]}
+    ))
+    monkeypatch.setitem(entry._FORCE_RECHECK, forced, 100)
+    order = entry._driver_order(str(tmp_path))
+    pos = {k: i for i, k in enumerate(order)}
+    assert pos[unrecorded] <= 1, (
+        f"unrecorded key {unrecorded} at slot {pos[unrecorded]} is not in "
+        "the first tier"
+    )
+    assert pos[unrecorded] < pos[forced] < min(pos[k] for k in stale)
 
 
 def test_regression_reenters_priority_tier(entry, tmp_path):
@@ -371,7 +352,7 @@ def test_regression_reenters_priority_tier(entry, tmp_path):
             "z": {"hash_match": False, "err": None, "spark_rows": 3},
         })
     )
-    verified, errored = entry._driver_history(str(tmp_path))
+    verified, errored = _history(entry, str(tmp_path))
     assert "x" in errored and "z" in errored
     assert "x" not in verified and "z" not in verified
 

@@ -122,6 +122,33 @@ def test_kmeans_centroids_partitioning_invariant(spark):  # noqa: F811
     assert a == b  # exact double equality across partitionings
 
 
+def test_kmeans_centroids_clamps_k_to_corpus(spark):  # noqa: F811
+    """A corpus with fewer rows than n_centroids yields one center per
+    row instead of raising IndexError: each row is its own cluster, so
+    the centers are the rows themselves."""
+    from parquet_importer_spark.operators.similarity import (
+        kmeans_centroids,
+    )
+
+    rows = [[0.0, 1.0], [1.0, 1.0], [2.0, 1.0]]
+    emb = spark.createDataFrame([(r,) for r in rows], "embedding array<double>")
+    cent = kmeans_centroids(emb, n_centroids=16).collect()
+    assert sorted(r.cid for r in cent) == [0, 1, 2]
+    assert sorted(list(r.cvec) for r in cent) == rows
+
+
+def test_kmeans_centroids_empty_corpus(spark):  # noqa: F811
+    """An empty corpus yields an empty (cid, cvec) frame, not a raise."""
+    from parquet_importer_spark.operators.similarity import (
+        kmeans_centroids,
+    )
+
+    emb = spark.createDataFrame([], "embedding array<double>")
+    cent = kmeans_centroids(emb, n_centroids=16)
+    assert cent.schema.simpleString() == "struct<cid:int,cvec:array<double>>"
+    assert cent.count() == 0
+
+
 def test_gram_digest_convention_shared_across_engines(spark):  # noqa: F811
     """r14 verdict "What's wrong" #3: llm_contamination_ngram /
     llm_decontam_substring apply the SAME 60-bit md5-prefix BIGINT
