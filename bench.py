@@ -3,9 +3,14 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {id: sec, ...}, "sf": ...}.
 
+    python bench.py                  # the HEADLINE keys; writes BENCH_DETAIL.json
+    python bench.py llm_dedup_ q1    # every registry key with one of these prefixes
+
 Each query is materialized via the noop sink (full column evaluation, no
 driver collect, no output IO) — wall time measures scan + shuffle + compute
-only, the portion that scales with data volume on a real cluster.
+only, the portion that scales with data volume on a real cluster. Spark's
+event log records each run's task metrics; the best run's totals per key
+form the ``ledger`` in the detail record.
 """
 
 from __future__ import annotations
@@ -14,9 +19,14 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
+from contextlib import contextmanager
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+from perfbench.spans import parse_event_log  # noqa: E402
 
 #: one query per plan family — scan, filter/project, hash agg, broadcast
 #: join, sort-merge join, as-of (range+window) join, window fn, top-k,
@@ -139,156 +149,140 @@ def _ambient_snapshot() -> dict:
     return snap
 
 
-def main() -> None:
+@contextmanager
+def event_log(app_name: str):
+    """A fresh session with Spark's event log on, yielded as ``(spark, groups)``.
+
+    The log is written uncompressed to one file in a temp dir (Spark 4
+    defaults to zstd rolling directories, which the line parser cannot
+    read). On leaving the block the session is stopped and ``groups`` is
+    filled with :func:`perfbench.spans.parse_event_log` totals per
+    ``spark.jobGroup.id``.
+    """
+    from parquet_importer_spark.session import get_spark  # noqa: PLC0415
+
+    groups: dict[str, dict] = {}
+    with tempfile.TemporaryDirectory(prefix="eventlog_") as log_dir:
+        spark = get_spark(
+            app_name,
+            extra_conf={
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": "file://" + log_dir,
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.rolling.enabled": "false",
+            },
+        )
+        app_id = spark.sparkContext.applicationId
+        try:
+            yield spark, groups
+        finally:
+            spark.stop()
+        with open(os.path.join(log_dir, app_id)) as fh:
+            groups.update(parse_event_log(fh))
+
+
+def best_run_ledger(
+    groups: dict[str, dict], walls: dict[str, list[float]]
+) -> dict[str, dict]:
+    """Per key, the event-log totals of its fastest run; run ``i`` of key
+    ``q`` ran under job group ``bench:{q}:{i}``."""
+    ledger = {}
+    for qid, runs in walls.items():
+        best = runs.index(min(runs))
+        if (g := groups.get(f"bench:{qid}:{best}")) is not None:
+            ledger[qid] = g
+    return ledger
+
+
+def serial_plans(ledger: dict[str, dict]) -> list[str]:
+    """Keys whose every executed stage ran one task. AQE rightly
+    coalesces a 5-row result to 1 final task, so a small final stage is
+    normal — the red flag is a plan with no wide stage at all (e.g. the
+    single-row-group scan floor), invisible in sf0.1 wall time but fatal
+    at 100 TB."""
+    return sorted(
+        q for q, g in ledger.items() if g["stages"] and g["tasks"] == g["stages"]
+    )
+
+
+def main(prefixes: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from parquet_importer_spark.session import get_spark
     from parquet_importer_spark.suite import QUERIES
 
+    keys = (
+        [q for q in QUERIES if any(q.startswith(p) for p in prefixes)]
+        if prefixes
+        else HEADLINE
+    )
     amb_start = _ambient_snapshot()
-    spark = get_spark("bench")
-    # Warm up the JVM + parquet footer reads once so per-query timings
-    # measure execution, not first-touch initialization.
-    QUERIES["flagship_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # Sentinel drift probe: the (already codegen-warm) flagship runs
-    # once FIRST and once LAST; their ratio is a same-session slowdown
-    # measure every round can normalize the suite total by.
-    t0 = time.perf_counter()
-    QUERIES["flagship_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    sent_first = round(time.perf_counter() - t0, 3)
-
-    # best of 2 runs per query: the first run of a plan pays Janino
-    # whole-stage-codegen compilation (hundreds of ms of driver-side
-    # noise unrelated to data volume); the min is the steady-state cost
-    # that actually scales with input size.
     timings: dict[str, float] = {}
-    partitions: dict[str, dict] = {}
+    walls: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     unstable: dict[str, float] = {}
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    for qid in HEADLINE:
-        if qid not in QUERIES:
-            errors[qid] = "not registered"
-            continue
-        try:
+    with event_log("bench") as (spark, groups):
+        sc = spark.sparkContext
+
+        def run(qid: str) -> float:
+            # timer covers query construction too: iterative operators
+            # (e.g. llm_dedup_clusters) do distributed work while
+            # building their result DataFrame
+            t0 = time.perf_counter()
+            QUERIES[qid](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            return time.perf_counter() - t0
+
+        # Warm up the JVM + parquet footer reads once so per-query
+        # timings measure execution, not first-touch initialization.
+        run("flagship_pricing_summary")
+        # Sentinel drift probe: the (already codegen-warm) flagship runs
+        # once FIRST and once LAST; their ratio is a same-session
+        # slowdown measure every round can normalize the suite total by.
+        sent_first = round(run("flagship_pricing_summary"), 3)
+
+        # best of 2 runs per query: the first run of a plan pays Janino
+        # whole-stage-codegen compilation (hundreds of ms of driver-side
+        # noise unrelated to data volume); the min is the steady-state
+        # cost that actually scales with input size.
+        for qid in keys:
+            if qid not in QUERIES:
+                errors[qid] = "not registered"
+                continue
             runs: list[float] = []
-            sc.setJobGroup(f"bench:{qid}", qid)
-            for _ in range(2):
-                # timer covers query construction too: iterative operators
-                # (e.g. llm_dedup_clusters) do distributed work while
-                # building their result DataFrame
-                t0 = time.perf_counter()
-                df = QUERIES[qid](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            # adaptive third run: this box shows heavy-tailed ambient
-            # stalls (an identical back-to-back run can read 1.6 s then
-            # 9.3 s — SURVEY §8.1), so when the two runs disagree by
-            # >30% the min is not yet a settled steady-state number; one
-            # more sample costs seconds and de-noises the recorded
-            # series the round it happens instead of a round later.
-            if max(runs) > 1.3 * min(runs):
-                t0 = time.perf_counter()
-                QUERIES[qid](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
+            try:
+                for i in range(3):
+                    # adaptive third run: this box shows heavy-tailed
+                    # ambient stalls (an identical back-to-back run can
+                    # read 1.6 s then 9.3 s — SURVEY §8.1), so when the
+                    # two runs disagree by >30% the min is not yet a
+                    # settled steady-state number; one more sample costs
+                    # seconds and de-noises the recorded series.
+                    if i == 2 and max(runs) <= 1.3 * min(runs):
+                        break
+                    sc.setJobGroup(f"bench:{qid}:{i}", qid)
+                    runs.append(run(qid))
+            except Exception as exc:  # one broken query must not kill the run
+                errors[qid] = f"{type(exc).__name__}: {exc}"[:200]
+                continue
+            finally:
+                sc.setJobGroup("", "")
+            walls[qid] = runs
             timings[qid] = round(min(runs), 3)
             # dispersion flag: when even the two BEST runs disagree by
             # >30% the recorded min is still unsettled (a single ambient
             # stall among three runs is fine — two agreeing fast runs
-            # confirm the min). The r5 llm_dedup_containment 0.856 s
-            # outlier (SURVEY §8.1) would have carried this flag. Lands
-            # in the stderr detail.
+            # confirm the min). Lands in the stderr detail.
             best2 = sorted(runs)[:2]
             if best2[1] > 1.3 * best2[0]:
                 unstable[qid] = round(best2[1] / best2[0], 2)
-            # scale guardrail (free driver-side metadata): per-stage task
-            # counts. AQE rightly coalesces a 5-row result to 1 final
-            # task, so a small final stage is normal — the red flag is a
-            # plan whose WIDEST stage is 1 task (fully serial: e.g. the
-            # single-row-group scan floor), invisible in sf0.1 wall time
-            # but fatal at 100 TB. Both numbers land in BENCH JSON.
-            job_ids = tracker.getJobIdsForGroup(f"bench:{qid}")
-            stage_ids = [
-                sid
-                for j in job_ids
-                for sid in (tracker.getJobInfo(j) or _NoJob()).stageIds
-            ]
-            infos = [
-                info
-                for sid in stage_ids
-                if (info := tracker.getStageInfo(sid)) is not None
-            ]
-            if infos and stage_ids:
-                final = tracker.getStageInfo(max(stage_ids))
-                partitions[qid] = {
-                    "final": final.numTasks if final else None,
-                    "max": max(i.numTasks for i in infos),
-                }
-        except Exception as exc:  # one broken query must not kill the run
-            errors[qid] = f"{type(exc).__name__}: {exc}"[:200]
-        finally:
-            sc.setJobGroup("", "")
 
-    # sf1.0 scale-ladder spot check (round-6 verdict item 6): run the
-    # most expensive headline queries ONCE against the 10× replica
-    # fixture (tools/make_scale_fixture.py → .scale/sf1) and record
-    # xlin = sec_sf1 / (10 × sec_sf0.1) — the super-linearity factor.
-    # xlin ≈ 1 means the plan scales linearly; > 1.5 flags a shape that
-    # would not survive a 100-TB promotion. Budget-capped and
-    # exception-guarded so the headline metric can never be lost to the
-    # spot run; skipped entirely when the replica fixture is absent.
-    sf1_spot: dict = {}
-    sf1_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scale", "sf1")
-    # xlin's ×10 denominator assumes the headline ran at sf0.1 — skip
-    # the spot block entirely for other SPARK_GRAFT_SF_DIR values
-    if os.path.isdir(sf1_dir) and timings and sf == 0.1:
-        spot_order = [
-            q for q, _ in sorted(timings.items(), key=lambda kv: -kv[1])
-        ][:10]
-        budget = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET", "300"))
-        t_start = time.perf_counter()
-        xlin: dict[str, float] = {}
-        skipped: list[str] = []
-        for qid in spot_order:
-            if time.perf_counter() - t_start > budget:
-                skipped.append(qid)
-                continue
-            try:
-                t0 = time.perf_counter()
-                QUERIES[qid](spark, sf1_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                sec = time.perf_counter() - t0
-                xlin[qid] = round(sec / (10.0 * timings[qid]), 2)
-            except Exception as exc:
-                errors[f"sf1:{qid}"] = f"{type(exc).__name__}: {exc}"[:200]
-        if xlin:
-            worst = max(xlin, key=xlin.get)
-            sf1_spot = {
-                "n": len(xlin),
-                "max_xlin": xlin[worst],
-                "worst": worst,
-                "xlin": xlin,
-            }
-            if skipped:
-                sf1_spot["budget_skipped"] = skipped
-
-    # Closing sentinel + ambient markers (see _ambient_snapshot).
-    t0 = time.perf_counter()
-    QUERIES["flagship_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    sent_last = round(time.perf_counter() - t0, 3)
-    amb_end = _ambient_snapshot()
+        # Closing sentinel + ambient markers (see _ambient_snapshot).
+        sent_last = round(run("flagship_pricing_summary"), 3)
+        amb_end = _ambient_snapshot()
+    ledger = best_run_ledger(groups, walls)
     # Compact (parsed-stdout) markers: dr = last/first ratio of the
     # codegen-warm flagship sentinel (same-session slowdown), busy =
     # whole-box CPU share over the suite (includes our own Spark load;
@@ -334,11 +328,7 @@ def main() -> None:
     # fingerprint matches the reference's.
     vs_ref: dict[str, float] = {}
     try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "BENCH_REF.json"
-            )
-        ) as fh:
+        with open(os.path.join(ROOT, "BENCH_REF.json")) as fh:
             ref = json.load(fh)
         if ref.get("fixture") == fp:
             for qid, sec in timings.items():
@@ -368,27 +358,14 @@ def main() -> None:
     # line toward the driver's 2000-char capture for no information).
     # Additions-only: timing methodology and existing fields unchanged.
     out["sentinels"] = [k for k in SENTINEL_KEYS if k in timings]
-    if sf1_spot:
-        out["sf1_spot"] = {
-            k: sf1_spot[k] for k in ("n", "max_xlin", "worst")
-        }
-    elif sf == 0.1:
-        # an explicit skip instead of a dropped key, so a fixture-less
-        # run is distinguishable from a never-attempted one; always a
-        # dict, so the field's type does not change between runs
-        out["sf1_spot"] = {
-            "skipped": "fixture missing (tools/make_scale_fixture.py)"
-            if not os.path.isdir(sf1_dir)
-            else "no xlin samples (see errors)"
-        }
     if errors:
         # names only in the compact line — full messages would blow the
         # length budget right when the driver most needs a parseable
         # metric; the messages go to the stderr detail record below
         out["failed"] = sorted(errors)
     # Stage-level diagnostics go to STDERR: the driver captures only the
-    # last 2000 chars of stdout and JSON-parses them, and stage_tasks/
-    # serial_plans grew the round-2/3 stdout line past that window
+    # last 2000 chars of stdout and JSON-parses them, and per-stage
+    # diagnostics grew the round-2/3 stdout line past that window
     # (BENCH_r02/r03 "parsed": null). The final stdout line is the
     # compact result JSON alone; tests/test_driver_order.py pins its
     # length under 1860 chars for the current headline.
@@ -398,43 +375,28 @@ def main() -> None:
             sum(timings.values()) / max(len(timings), 1), 3
         ),
         "errors": errors,
-        "stage_tasks": partitions,
-        "serial_plans": sorted(
-            q for q, p in partitions.items() if p["max"] <= 1
-        ),
+        "serial_plans": serial_plans(ledger),
         "unstable_runs": unstable,
         "ambient_start": amb_start,
         "ambient_end": amb_end,
         "sentinel": {"first": sent_first, "last": sent_last},
         "vs_ref_movers": vs_ref,
-        # last key on purpose: the driver keeps the LAST 2000 chars of
-        # combined output, so the per-query scale factors survive even
-        # when the head of this detail line is truncated
-        "sf1_xlin": sf1_spot.get("xlin", {}),
+        "ledger": ledger,
     }
     print(json.dumps(detail), file=sys.stderr)
     # The driver keeps only the last 2000 chars of combined output, so
     # the detail record above competes with the stdout line for the
     # window. Persist the FULL detail (ambient snapshots, sentinel
-    # pair, stage tasks, xlin, errors) next to this file — the judge
-    # and future rounds read it without truncation pressure.
-    try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_DETAIL.json",
-            ),
-            "w",
-        ) as fh:
-            json.dump({"compact": out, "detail": detail}, fh, indent=1)
-    except OSError:
-        pass
+    # pair, ledger, errors) of a headline run next to this file — the
+    # judge and future rounds read it without truncation pressure.
+    if not prefixes:
+        try:
+            with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as fh:
+                json.dump({"compact": out, "detail": detail}, fh, indent=1)
+        except OSError:
+            pass
     print(json.dumps(out))
 
 
-class _NoJob:
-    stageIds: tuple = ()
-
-
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

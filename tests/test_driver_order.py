@@ -167,8 +167,7 @@ def test_bench_stdout_line_fits_driver_capture():
     compact result line — metric/value/unit/fixture/queries/sf with a
     worst-case timing per headline query — must stay comfortably inside
     the capture (<1860 chars leaves headroom; n_queries/sec_per_query
-    are derivable and live in the stderr detail record). sf1_spot is
-    always a dict: the xlin summary, or {"skipped": reason}."""
+    are derivable and live in the stderr detail record)."""
     import bench
 
     worst = {
@@ -195,19 +194,14 @@ def test_bench_stdout_line_fits_driver_capture():
             "mv": 99,
         },
     }
-    spots = (
-        {"n": 10, "max_xlin": 999.99, "worst": max(bench.HEADLINE, key=len)},
-        {"skipped": "fixture missing (tools/make_scale_fixture.py)"},
+    line = json.dumps(worst)
+    # 1860 since r15 (was 1800): the sentinels designation adds ~75
+    # fixed chars; the driver capture is 2000, so 140 chars of
+    # headroom remain for the truncation-side margin.
+    assert len(line) < 1860, (
+        f"bench stdout line is {len(line)} chars; trim the headline or "
+        "shorten query ids so the driver's 2000-char tail capture parses"
     )
-    for spot in spots:
-        line = json.dumps({**worst, "sf1_spot": spot})
-        # 1860 since r15 (was 1800): the sentinels designation adds ~75
-        # fixed chars; the driver capture is 2000, so 140 chars of
-        # headroom remain for the truncation-side margin.
-        assert len(line) < 1860, (
-            f"bench stdout line is {len(line)} chars; trim the headline or "
-            "shorten query ids so the driver's 2000-char tail capture parses"
-        )
 
 
 def test_rows_only_keys_reenter_on_cadence(entry, tmp_path):

@@ -1,11 +1,11 @@
-"""SCALE_SWEEP.json coverage guard (round-8 verdict item 5).
+"""SCALE_LADDER.json coverage guards.
 
-The full-registry scale sweep is the repo's strongest 100-TB-design
-evidence; a silently dropped key would read as "covered" when it
-isn't. Enforce: every registered query appears in the sweep results
-except the documented live-Postgres sinks (tools/scale_sweep.py SKIP),
-and no sweep row names a query that no longer exists (renames must
-re-sweep, not inherit stale timings).
+The scale ladder is the repo's strongest 100-TB-design evidence; a
+silently dropped key would read as "covered" when it isn't. Enforce:
+every registered query has a ladder row except the documented
+live-Postgres sinks (tools/scale_ladder.py SKIP), and no row names a
+query that no longer exists (renames must re-ladder, not inherit stale
+timings).
 """
 
 from __future__ import annotations
@@ -15,32 +15,13 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SWEEP = os.path.join(REPO, "SCALE_SWEEP.json")
-
-
-def test_sweep_covers_registry_minus_live_sinks():
-    if not os.path.exists(SWEEP):
-        return  # pre-first-sweep working tree
-    sys.path.insert(0, REPO)
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from parquet_importer_spark.suite import QUERIES
-
-    import scale_sweep
-
-    with open(SWEEP) as fh:
-        rows = json.load(fh)["results"]
-    missing = sorted(set(QUERIES) - set(rows) - scale_sweep.SKIP)
-    stale = sorted(set(rows) - set(QUERIES))
-    assert not missing, f"registry keys never swept: {missing}"
-    assert not stale, f"sweep rows for unregistered keys: {stale}"
 
 
 def test_ladder_covers_registry_minus_live_sinks():
-    """Same guard for the 100x ladder (round-9 verdict item 5): the
-    second decade is where fixed-width hash structures, saturating
-    clamps, and cardinality contracts break — every registry key gets
-    a ladder row or a pinned exclusion (tools/scale_ladder.py SKIP,
-    the same live-Postgres pair the sweep excludes)."""
+    """Every registry key gets a ladder row (sf0.1/sf1/sf10) or a
+    pinned exclusion (tools/scale_ladder.py SKIP): the second decade is
+    where fixed-width hash structures, saturating clamps, and
+    cardinality contracts break."""
     ladder = os.path.join(REPO, "SCALE_LADDER.json")
     if not os.path.exists(ladder):
         return  # pre-first-ladder working tree
