@@ -241,9 +241,7 @@ def sink_postgres_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: DDL once on the driver; data only moves executor →
     database (never through the driver); connection count = partition
     count, bounded by ``num_partitions`` exactly like the JDBC sink.
-    At 100 TB the DSN points at the warehouse and the same plan holds;
-    FORMAT binary is the one-line swap when text encode is the
-    bottleneck."""
+    At 100 TB the DSN points at the warehouse and the same plan holds."""
     from parquet_importer_spark.sources.postgres_copy import (  # noqa: PLC0415
         copy_into_postgres,
         read_back,
