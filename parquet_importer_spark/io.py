@@ -147,13 +147,14 @@ def parallelize(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
-def _parquet_row_groups(df: DataFrame) -> int | None:
-    """Total parquet row groups across the plan's scan files, or None
-    when it can't be known cheaply (non-parquet input, non-local URIs,
-    or more files than worth footer-probing — many files means many
-    splits, so the byte-range count is already honest there). Footer
-    reads are driver-side and ~ms each; results ride the same
-    per-plan-object cache as the split count."""
+def parquet_footers(df: DataFrame) -> list | None:
+    """``(local path, pyarrow FileMetaData)`` for each of the plan's scan
+    files, or None when they can't be read cheaply (non-parquet input,
+    non-local URIs, or more files than worth footer-probing — many files
+    means many splits, so the byte-range count is already honest there).
+    Footer reads are driver-side and ~ms each. The one footer probe
+    behind :func:`parallelize`'s row-group count and the COPY sink's
+    split listing (``sources.postgres_copy``)."""
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — e.g. streaming/RDD-backed plans
@@ -162,16 +163,26 @@ def _parquet_row_groups(df: DataFrame) -> int | None:
         return None
     import pyarrow.parquet as pq  # noqa: PLC0415
 
-    total = 0
+    footers = []
     for uri in files:
         if not uri.endswith(".parquet"):
             return None
         path = uri[len("file:"):] if uri.startswith("file:") else uri
         try:
-            total += pq.ParquetFile(path).metadata.num_row_groups
+            footers.append((path, pq.ParquetFile(path).metadata))
         except Exception:  # noqa: BLE001 — unreadable footer: stay honest
             return None
-    return total
+    return footers
+
+
+def _parquet_row_groups(df: DataFrame) -> int | None:
+    """Total parquet row groups across the plan's scan files, or None
+    when :func:`parquet_footers` can't read them; rides the same
+    per-plan-object cache as the split count."""
+    footers = parquet_footers(df)
+    if footers is None:
+        return None
+    return sum(md.num_row_groups for _, md in footers)
 
 
 def footer_rowcount(path: str) -> int:
