@@ -30,14 +30,8 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def duckdb_con(sf_dir):
     """DuckDB connection with the same views the driver registers."""
-    import duckdb
+    from tests.parity import duckdb_views
 
-    from parquet_importer_spark.io import TABLES, table_path
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+    con = duckdb_views(sf_dir)
     yield con
     con.close()

@@ -7,33 +7,24 @@
    while the DuckDB oracle's per-character enumeration kept counting
    them. ASCII corpora (all driver SFs) are bit-identical either way;
    these tests pin the non-ASCII case BOTH semantically (hand-computed
-   entropy) and against the oracle (drive_entry-identical compare).
+   entropy) and against the oracle (tests/parity.py's compare).
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
 
 import duckdb
 import pandas as pd
 
+from tests.parity import compare
+
 
 def _write(tmp_path, name, pdf):
     path = os.path.join(str(tmp_path), f"{name}.parquet")
     pdf.to_parquet(path, index=False)
     return str(tmp_path)
-
-
-def _vhash(pdf):
-    # byte-identical to tools/drive_entry.py vhash — the driver's compare
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(repr(v) if isinstance(v, float) else str(v) for v in r)
-        for r in pdf[cols].itertuples(index=False)
-    )
-    return hashlib.sha256(str(rows).encode()).hexdigest()[:12]
 
 
 def test_char_entropy_counts_unicode_line_separators(spark, tmp_path):
@@ -65,7 +56,7 @@ def test_char_entropy_counts_unicode_line_separators(spark, tmp_path):
 
 
 def test_char_entropy_unicode_matches_oracle(spark, tmp_path):
-    """The driver's own compare (rows / columns / value hash) on a
+    """The oracle compare (columns, rows, values, driver hash) on a
     corpus that exercises every surviving Unicode terminator — the
     exact divergence the round-9 ADVICE predicted."""
     from parquet_importer_spark.suite import ORACLES, QUERIES
@@ -88,6 +79,5 @@ def test_char_entropy_unicode_matches_oracle(spark, tmp_path):
             SELECT * FROM read_parquet('{sf}/documents.parquet')"""
     )
     odf = con.execute(ORACLES["llm_char_entropy"]).df()
-    assert len(sdf) == len(odf) == 5
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    assert _vhash(sdf) == _vhash(odf)
+    compare(sdf, odf, "llm_char_entropy")
+    assert len(sdf) == 5

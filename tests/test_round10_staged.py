@@ -8,9 +8,9 @@ stale burndown. Round 11 flipped them — plus llm_multimodal itself
 the suite's shared decimal-grid float contract, see
 operators/multimodal.py byte_entropy) — into the ``@query`` decorators
 in suite/llm_multimodal.py. This module remains as the LOCAL gate: the
-ASCII precondition that makes VARCHAR slicing equal byte slicing, and a
-drive_entry-equivalent hash compare for each key so a regression is
-caught before the driver window.
+ASCII precondition that makes VARCHAR slicing equal byte slicing, and
+the resize key's one-row shape on top of its oracle compare (the full
+compare of every key runs in tests/test_parity.py).
 
 Oracle validity preconditions (both pinned below):
 - the corpus is ASCII-only, so substring-by-chars IS substring-by-bytes
@@ -21,45 +21,10 @@ Oracle validity preconditions (both pinned below):
 
 from __future__ import annotations
 
-import hashlib
-
 import duckdb
 
 from tests.conftest import SF_ORACLE
-
-
-def _vhash(pdf):
-    # byte-identical to tools/drive_entry.py vhash — the driver's compare
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(repr(v) if isinstance(v, float) else str(v) for v in r)
-        for r in pdf[cols].itertuples(index=False)
-    )
-    return hashlib.sha256(str(rows).encode()).hexdigest()[:12]
-
-
-def _oracle_df(name: str):
-    import parquet_importer_spark.suite  # noqa: F401 — populates registry
-    from parquet_importer_spark.registry import ORACLES
-
-    con = duckdb.connect()
-    con.execute(
-        f"""CREATE VIEW documents AS
-            SELECT * FROM read_parquet('{SF_ORACLE}/documents.parquet')"""
-    )
-    return con.execute(ORACLES[name]).df()
-
-
-def _drive_compare(spark, name: str, expect_rows: int | None = None):
-    from parquet_importer_spark.suite import QUERIES
-
-    sdf = QUERIES[name](spark, SF_ORACLE).toPandas()
-    odf = _oracle_df(name)
-    assert len(sdf) == len(odf)
-    if expect_rows is not None:
-        assert len(sdf) == expect_rows
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    assert _vhash(sdf) == _vhash(odf)
+from tests.parity import compare, duckdb_views
 
 
 def test_corpus_is_ascii_so_varchar_slices_equal_byte_slices():
@@ -89,25 +54,17 @@ def test_multimodal_oracles_are_registered():
         assert name in ORACLES, f"{name} regressed to rows-only"
 
 
-def test_multimodal_frames_oracle_hash_matches(spark):
-    """Full drive_entry-equivalent gate: row count, column names, and
-    value hash all match at the driver's SF."""
-    _drive_compare(spark, "llm_multimodal_frames")
-
-
 def test_multimodal_resize_oracle_hash_matches(spark):
     """Codec-independence precondition: text payloads are not images,
     so both Pillow-present and Pillow-absent executors take the
-    deterministic byte-stride stub the live SQL mirrors."""
-    _drive_compare(spark, "llm_multimodal_resize", expect_rows=1)
+    deterministic byte-stride stub the live SQL mirrors, and the key
+    reduces the corpus to one row."""
+    from parquet_importer_spark.suite import ORACLES, QUERIES
 
-
-def test_multimodal_feature_oracle_hash_matches(spark):
-    """Round-10 verdict item 8: byte_entropy under the decimal-grid
-    contract hashes repr-exactly against the DuckDB replication —
-    per-row doubles, not an aggregate, so this is the strictest float
-    gate in the suite."""
-    _drive_compare(spark, "llm_multimodal")
+    name = "llm_multimodal_resize"
+    sdf = QUERIES[name](spark, SF_ORACLE).toPandas()
+    compare(sdf, duckdb_views(SF_ORACLE).execute(ORACLES[name]).df(), name)
+    assert len(sdf) == 1
 
 
 def test_byte_entropy_contract_edge_cases():

@@ -21,12 +21,13 @@ value-preserving cross-engine, not just non-throwing.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import duckdb
 import pandas as pd
 import pytest
+
+from tests.parity import compare
 
 
 @pytest.fixture(scope="module")
@@ -59,15 +60,6 @@ def overflow_sf_dir(tmp_path_factory):
     return str(root)
 
 
-def _vhash(pdf):
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(repr(v) if isinstance(v, float) else str(v) for v in r)
-        for r in pdf[cols].itertuples(index=False)
-    )
-    return hashlib.sha256(str(rows).encode()).hexdigest()
-
-
 def _oracle_df(sf_dir: str, sql: str):
     con = duckdb.connect()
     con.execute(
@@ -87,33 +79,7 @@ def test_moment_products_survive_bigint_overflow(spark, overflow_sf_dir, key):
     # shape (ANSI mode, Spark 4 default) — computing at all IS the gate
     sdf = QUERIES[key](spark, overflow_sf_dir).toPandas()
     assert len(sdf) > 0
-    odf = _oracle_df(overflow_sf_dir, ORACLES[key])
-    assert len(sdf) == len(odf)
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    assert _vhash(sdf) == _vhash(odf), (
-        f"{key}: Spark and DuckDB disagree in the overflow regime"
-    )
-
-
-@pytest.mark.parametrize(
-    "key", ["agg_ols_by_group", "ts_cross_correlation"]
-)
-def test_moment_fix_is_value_preserving_at_driver_sf(spark, key):
-    """The decimal promotion must be invisible at the driver SF: the
-    query still hash-matches its oracle on the real sf0.01 tables
-    (the same comparison the external driver runs)."""
-    from tests.conftest import SF_ORACLE
-    from parquet_importer_spark.suite import ORACLES, QUERIES
-
-    sdf = QUERIES[key](spark, SF_ORACLE).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('%s/events.parquet')" % SF_ORACLE
-    )
-    odf = con.execute(ORACLES[key]).df()
-    assert len(sdf) == len(odf)
-    assert _vhash(sdf) == _vhash(odf)
+    compare(sdf, _oracle_df(overflow_sf_dir, ORACLES[key]), key)
 
 
 # ---------------------------------------------------------------------------
