@@ -3,9 +3,13 @@ function compositions (zip_with / aggregate), no UDFs.
 
 Everything accumulates in double, sequentially, in list order, so the
 identical fold can be written in any engine (DuckDB: list_transform +
-list_sum) and produce bit-identical results. At 100 TB these compile
-into codegen'd loops over the Arrow-backed array vectors — no Python,
-no shuffle.
+list_sum) and produce bit-identical results. Spark's higher-order
+functions do NOT compile into codegen'd loops: they are
+``CodegenFallback`` expressions whose lambdas run interpreted, row by
+row — no Python and no shuffle, but per-element interpreter cost.
+Where one vector meets many (nearest-center assignment), the same fold
+runs as a numpy Arrow batch kernel instead
+(``operators.similarity.nearest_center``), bit for bit.
 """
 
 from __future__ import annotations
@@ -61,7 +65,8 @@ def oracle_cosine(a: str, b: str) -> str:
 
 
 def dist2(a: Column, b: Column) -> Column:
-    """Σ (aᵢ−bᵢ)² (squared L2 distance) — same ordered left fold."""
+    """Σ (aᵢ−bᵢ)² (squared L2 distance) — same ordered left fold; the
+    reference the nearest-center kernel is tested against."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (_dbl(x) - _dbl(y)) * (_dbl(x) - _dbl(y))),
         F.lit(0.0),

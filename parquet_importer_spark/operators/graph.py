@@ -41,6 +41,8 @@ def pagerank(
 
     ``nodes``: one row per node (column ``id_col``). ``edges``: directed
     (src, dst) pairs — pass both directions for an undirected graph.
+    Rank sent along an edge to a node absent from ``nodes`` is dropped,
+    as in the SQL oracle's base LEFT JOIN; such nodes get no row.
 
     Per round: contributions = rank/out_degree shuffled on dst (slim
     (dst, contrib) rows), one aggregate, dangling mass folded back
@@ -69,11 +71,12 @@ def pagerank(
     od_type = dict(ranks.dtypes)["out_deg"]
     # 1-row seed for the sentinel group: guarantees the NULL-node group
     # exists (so the dangling broadcast is always exactly one row) even
-    # on a graph with no dangling nodes; adding an exact decimal 0 to
-    # the sum changes nothing.
+    # on a graph with no dangling nodes, and tags it out_deg = -1 so no
+    # other group can pass for it; adding an exact decimal 0 to the sum
+    # changes nothing.
     sentinel_seed = nodes.sparkSession.range(1).select(
         F.lit(None).cast(node_type).alias("node"),
-        F.lit(None).cast(od_type).alias("od"),
+        F.lit(-1).cast(od_type).alias("od"),
         F.lit(0.0).alias("c"),
     )
     for _ in range(n_iter):
@@ -140,14 +143,17 @@ def pagerank(
         # the expensive edges-join map stage ran twice per round).
         # out_deg = MAX(od) is an aggregate OUTPUT, so predicates on it
         # stay above the exchange: the sentinel group is the only group
-        # whose out_deg is NULL (every real node carries exactly one
-        # presence row; edge endpoints are a subset of ``nodes`` per
-        # this function's contract).
-        dangling = agg.filter(F.isnull("out_deg")).select(
+        # whose out_deg is -1, and every node of ``nodes`` carries
+        # exactly one presence row with out_deg >= 0. An edge to a node
+        # absent from ``nodes`` makes a group of its own with a NULL
+        # out_deg, which both filters drop: its mass is lost, as in the
+        # SQL oracle's base LEFT JOIN, instead of a second dangling row
+        # multiplying every rank through the cross join.
+        dangling = agg.filter(F.col("out_deg") == -1).select(
             F.col("in_mass").alias("d")
         )
         ranks = (
-            agg.filter(F.isnotnull("out_deg"))
+            agg.filter(F.col("out_deg") >= 0)
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node",

@@ -3,7 +3,7 @@
 Two tiers, as a 100-TB design requires:
 
 - **brute-force top-k vs a query vector**: broadcast the 1-row query,
-  cosine via zip_with/aggregate (codegen'd, no Python), then
+  cosine via zip_with/aggregate (interpreted lambdas, no Python), then
   TakeOrderedAndProject — per-partition local top-k, driver merges
   k·partitions rows. Linear scan, zero shuffle of the corpus.
 - **LSH-bucketed pairwise (the scale path)**: random-hyperplane-style
@@ -12,15 +12,190 @@ Two tiers, as a 100-TB design requires:
   bucket, turning O(n²) into Σ O(nᵦ²). Deterministic → SQL-oracle-able;
   swap the fixed dims for seeded random hyperplanes at production scale
   (same plan shape, still no UDFs).
+
+Nearest-center assignment (semdedup, IVF, PQ, k-means) is one Arrow
+batch kernel, :func:`nearest_center`.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from parquet_importer_spark.functions.vectors import cosine
 from parquet_importer_spark.io import parallelize
+
+
+def _center_scorer(
+    vec_col: str, centers: list[list[float]], metric: str, slices: int
+):
+    """The ``mapInArrow`` function behind :func:`nearest_center`: appends
+    ``_raw`` (array<double>), the unrounded score of each row's
+    ``vec_col`` against every center, slice-major.
+
+    Self-contained (numpy/pyarrow imported inside, no package globals):
+    executor Python workers may not have the package on ``sys.path``.
+    Bit-identical to the ``functions.vectors`` folds: float32 widens to
+    float64, then ``acc = acc + x*y`` (or ``(x-y)*(x-y)``) runs one
+    dimension at a time in list order — never ``np.dot``/``@``/
+    ``einsum``/``np.sum``, which reorder the sum or fuse the
+    multiply-add — and cosine keeps ``d / (na * nb)`` with the zero-norm
+    guard (→ 0.0; NaN norms pass the guard, as Spark's ``NaN > 0`` is
+    true). Rounding is left to Spark, whose HALF_UP on
+    ``Double.toString`` numpy does not reproduce.
+
+    Raises ``ValueError`` (inside the task) on a NULL vector, a NULL
+    element, a vector whose length differs from the centers', and a
+    cosine whose nonzero norms multiply to 0.0 — inputs on which the
+    folds return NULL or divide by zero."""
+
+    def score(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        c = np.asarray(centers, dtype=np.float64)
+        k, dim = c.shape
+        w = dim // slices
+        ct = np.ascontiguousarray(c.T)  # (dim, k): row i = every center's x_i
+
+        def sq_norms(m):  # m: (dim, rows) -> per-slice sqrt(Σ x²), (slices, rows)
+            out = np.empty((slices, m.shape[1]))
+            for j in range(slices):
+                acc = np.zeros(m.shape[1])
+                for i in range(j * w, (j + 1) * w):
+                    acc = acc + m[i] * m[i]
+                out[j] = np.sqrt(acc)
+            return out
+
+        cn = sq_norms(ct) if metric == "cosine" else None
+        for batch in batches:
+            col = batch.column(vec_col)
+            n = len(col)
+            if col.null_count:
+                raise ValueError(f"nearest_center: NULL vector in {vec_col!r}")
+            vals = col.flatten()
+            if vals.null_count:
+                raise ValueError(f"nearest_center: NULL element in {vec_col!r}")
+            if n and pc.any(pc.not_equal(pc.list_value_length(col), dim)).as_py():
+                raise ValueError(
+                    f"nearest_center: {vec_col!r} length is not the centers' {dim}"
+                )
+            xt = np.ascontiguousarray(
+                vals.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim).T
+            )
+            scores = np.empty((n, slices, k))
+            xn = sq_norms(xt) if metric == "cosine" else None
+            for j in range(slices):
+                acc = np.zeros((n, k))
+                for i in range(j * w, (j + 1) * w):
+                    if metric == "dist2":
+                        t = xt[i][:, None] - ct[i][None, :]
+                        acc = acc + t * t
+                    else:
+                        acc = acc + xt[i][:, None] * ct[i][None, :]
+                if metric == "cosine":
+                    na, nb = xn[j][:, None], cn[j][None, :]
+                    ok = ~(na <= 0) & ~(nb <= 0)  # NaN > 0 holds in Spark
+                    prod = na * nb
+                    if np.any(ok & (prod == 0)):
+                        raise ValueError("nearest_center: norm product underflows to 0")
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        acc = np.where(ok, acc / prod, 0.0)
+                scores[:, j, :] = acc
+            m = slices * k
+            raw = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n * m + 1, m, dtype=np.int32)),
+                pa.array(scores.reshape(-1)),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, raw], names=[*batch.schema.names, "_raw"]
+            )
+
+    return score
+
+
+def cid_array(cids: list[int]) -> Column:
+    """``cids`` as one bigint array literal, to map a position in
+    :func:`nearest_center`'s ``scores`` back to its cid (one SQL string:
+    a py4j call per ``F.lit`` costs ~0.5 ms of build time each)."""
+    return F.expr(f"CAST(array({', '.join(map(str, cids))}) AS array<bigint>)")
+
+
+def nearest_center(
+    df: DataFrame,
+    vec_col: str,
+    centers: DataFrame | Sequence[tuple[int, Sequence[float]]],
+    metric: str = "cosine",
+    dp: int | None = 6,
+    slices: int = 1,
+) -> DataFrame:
+    """Assign every row of ``df`` to its nearest center, map-side: one
+    Arrow batch kernel (:func:`_center_scorer`) scores each batch
+    against the collected center matrix, and Spark rounds and picks —
+    no cross join, no exchange, no per-vector aggregate.
+
+    ``centers``: ``(cid, vector)`` pairs, or a frame whose first two
+    columns are those (collected here; it must be small). ``metric``
+    ``"cosine"`` (``functions.vectors.cosine``; best = largest) or
+    ``"dist2"`` (``dist2``; best = smallest). ``dp``: scores are
+    ``F.round(score, dp)`` before the pick (None: unrounded).
+    ``slices`` > 1 splits the vectors into that many equal sub-vectors
+    scored separately (product quantization's sub-spaces).
+
+    Adds ``scores`` (array<double>: every center's score in cid order;
+    slice j's are elements j·k … j·k+k−1) and, per slice, the best
+    center's ``cid`` (bigint) and its ``score`` — named ``cid``/
+    ``score`` when ``slices`` is 1, else ``cid{j}``/``score{j}``. Ties
+    go to the smallest cid; NaN scores order above every number, as in
+    Spark. With no centers no row survives, like an inner cross join.
+    NULL vectors or elements and lengths other than the centers' raise
+    ``ValueError`` (see :func:`_center_scorer`)."""
+    if metric not in ("cosine", "dist2"):
+        raise ValueError(f"metric must be cosine or dist2, got {metric!r}")
+    if isinstance(centers, DataFrame):
+        centers = [(r[0], r[1]) for r in centers.collect()]
+    centers = sorted(centers, key=lambda c: c[0])
+    if any(v is None or None in v for _, v in centers):
+        raise ValueError("nearest_center: NULL center vector or element")
+    cids = [int(c) for c, _ in centers]
+    mat = [[float(x) for x in v] for _, v in centers]
+    dim = len(mat[0]) if mat else 0
+    if slices < 1 or any(len(v) != dim for v in mat) or dim % slices:
+        raise ValueError(
+            f"nearest_center: centers need one length divisible by slices={slices}"
+        )
+    k = len(cids)
+    if k:
+        raw_type = T.StructField("_raw", T.ArrayType(T.DoubleType()))
+        raw = df.mapInArrow(
+            _center_scorer(vec_col, mat, metric, slices),
+            T.StructType([*df.schema.fields, raw_type]),
+        )
+    else:  # like an inner cross join with no centers: no row survives
+        raw = df.limit(0).withColumn("_raw", F.lit(None).cast("array<double>"))
+    # F.transform's interpreted lambda measured faster here than one
+    # codegen'd round() per element (0.38 s vs 0.48 s for 2000 × 64)
+    scores = (
+        F.col("_raw") if dp is None else F.transform("_raw", lambda s: F.round(s, dp))
+    )
+    out = raw.select(*(raw[c] for c in df.columns), scores.alias("scores"))
+    pick = F.array_max if metric == "cosine" else F.array_min
+    cid_arr = cid_array(cids)
+    picks = []
+    for j in range(slices):
+        sub = F.col("scores") if slices == 1 else F.slice("scores", j * k + 1, k)
+        tag = "" if slices == 1 else str(j)
+        best = pick(sub)
+        pos = F.array_position(sub, best).cast("int")
+        picks += [
+            F.element_at(cid_arr, pos).alias(f"cid{tag}"),
+            best.alias(f"score{tag}"),
+        ]
+    return out.select("*", *picks)
 
 
 def topk_cosine(
@@ -452,12 +627,13 @@ def kmeans_centroids(
     few Lloyd rounds of "assign → per-dimension mean". Each round here
     is ONE partial-aggregatable exchange of k×dim (cid, pos) rows plus
     one KB-scale collect (the centers come back to the driver each
-    round exactly like MLlib's fit, and the next round re-broadcasts
-    them as plan literals — the llm_cluster_kmeans_exact shape):
+    round exactly like MLlib's fit, and the next round ships them to
+    the assignment kernel — the llm_cluster_kmeans_exact shape):
 
-    - assignment is a map-side array-expression argmin over the k
-      literal centers (squared-L2, MLlib's metric; ties break on the
-      lower cid) — no shuffle, no per-vector groupBy;
+    - assignment is :func:`nearest_center`'s map-side Arrow batch
+      argmin over the k collected centers (squared-L2, MLlib's metric,
+      unrounded; ties break on the lower cid) — no shuffle, no
+      per-vector groupBy;
     - the update shuffles only (cid, pos, x) partial sums — the
       exchange is k×dim rows after map-side combine, independent of n;
     - init picks the ``n_centroids`` vectors with the smallest
@@ -479,8 +655,6 @@ def kmeans_centroids(
     centers. ``max_iter`` default dropped 5 → 2: each extra round is a
     full corpus pass at 100 TB, and measured recall had converged by
     round 2 at every fixture (round 3 read equal or lower)."""
-    from parquet_importer_spark.functions.vectors import dist2  # noqa: PLC0415
-
     spark = df.sparkSession
     v = F.col(vec_col)
     init = (
@@ -494,27 +668,10 @@ def kmeans_centroids(
     ]
     dim = len(centers[0]) if centers else 0
     for _ in range(max_iter if centers else 0):
-        # centers travel as ONE broadcast row holding an
-        # array<array<double>> — a plan-literal k×dim array was measured
-        # planning/codegen-bound (seconds per round at 500 rows), while
-        # a column reference keeps the expression tree constant-size
-        cent_row = spark.createDataFrame(
-            [([list(c) for c in centers],)], "carr array<array<double>>"
-        )
-        scored = F.transform(
-            F.col("carr"),
-            # named_struct: .alias() inside a lambda does not name struct
-            # fields, and argmin needs the (d, cid) ordering by name
-            lambda c, i: F.named_struct(
-                F.lit("d"), dist2(v, c), F.lit("cid"), i.cast("int")
-            ),
-        )
-        best_cid = F.array_min(scored).getField("cid")
         # Per-dimension means as `dim` flat aggregate columns, NOT a
-        # posexplode: a generator inlines the argmin projection and
-        # re-evaluates it per EXPLODED row (measured 64× — 17 s vs
-        # 1.3 s per round at sf0.1). As grouping key the argmin runs
-        # once per input row, the aggregate partial-combines map-side,
+        # posexplode: a generator re-evaluates its input per EXPLODED
+        # row (measured 64× — 17 s vs 1.3 s per round at sf0.1). Grouped
+        # on the assigned cid, the aggregate partial-combines map-side
         # and the exchange carries k rows regardless of corpus size.
         def mean6(i: int):  # DECIMAL-exact, 6-dp-snapped (order-free)
             return F.round(
@@ -529,8 +686,10 @@ def kmeans_centroids(
             )
 
         rows = (
-            df.crossJoin(F.broadcast(cent_row))
-            .groupBy(best_cid.alias("cid"))
+            nearest_center(
+                df.select(v), vec_col, list(enumerate(centers)), "dist2", dp=None
+            )
+            .groupBy("cid")
             .agg(*[mean6(i).alias(f"m{i}") for i in range(dim)])
             .collect()
         )
@@ -553,52 +712,40 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF (inverted-file) approximate nearest neighbors.
 
-    Index: every vector is assigned to its nearest centroid (one slim
-    shuffle on vec id via max_by). Search: score the query against the
-    tiny centroid table, probe the ``nprobe`` best clusters, and run
-    exact cosine ONLY inside them — scanning ~nprobe/n_centroids of the
-    corpus instead of all of it.
+    Index: every vector is assigned to its nearest centroid map-side
+    (:func:`nearest_center`, no shuffle). Search: score the query
+    against the same collected centroids, probe the ``nprobe`` best
+    clusters, and run exact cosine ONLY inside them — scanning
+    ~nprobe/n_centroids of the corpus instead of all of it.
 
     Default centroids are the deterministic seed set (vectors with
     id < n_centroids) so a SQL oracle reproduces the index exactly;
     pass ``centroids`` (columns ``cid, cvec``) to swap in learned ones —
-    :func:`kmeans_centroids` is the production path (same plan:
-    centroids stay broadcast-small either way, and the assignment /
-    probe machinery is unchanged).
+    :func:`kmeans_centroids` is the production path (same plan: the
+    centroids are collected either way, and the assignment / probe
+    machinery is unchanged).
     """
-    cent = (
-        centroids
-        if centroids is not None
-        else df.filter(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-        )
+    if centroids is None:
+        centroids = df.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
+    cent = sorted(((r[0], r[1]) for r in centroids.collect()), key=lambda c: c[0])
+    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    # assignment: best cosine, ties to the lower cid (both engines agree)
+    assigned = nearest_center(base, "v", cent, "cosine").select(
+        "id", F.col("cid").alias("cluster"), "v"
     )
-    base = parallelize(df).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    )
-    # assignment: broadcast centroids, per-vector argmax by (sim, -cid)
-    # (the -cid tiebreak keeps both engines deterministic on exact ties)
-    scored = base.crossJoin(F.broadcast(cent)).select(
-        "id",
-        "v",
-        "cid",
-        F.round(cosine(F.col("v"), F.col("cvec")), 6).alias("csim"),
-    )
-    assigned = scored.groupBy("id").agg(
-        F.max_by(
-            F.struct("cid", "v"), F.struct(F.col("csim"), -F.col("cid"))
-        ).alias("best")
-    ).select("id", F.col("best.cid").alias("cluster"), F.col("best.v").alias("v"))
     # probe list: nprobe clusters nearest to the query
     probes = (
-        cent.crossJoin(F.broadcast(query_vec_df))
+        nearest_center(query_vec_df.select("qvec"), "qvec", cent, "cosine")
+        .select(F.posexplode("scores").alias("pos", "qsim"))
         .select(
-            "cid",
-            F.round(cosine(F.col("cvec"), F.col("qvec")), 6).alias("qsim"),
+            F.element_at(cid_array([c for c, _ in cent]), F.col("pos") + 1).alias(
+                "cluster"
+            ),
+            "qsim",
         )
-        .orderBy(F.col("qsim").desc(), F.col("cid").asc())
+        .orderBy(F.col("qsim").desc(), F.col("cluster").asc())
         .limit(nprobe)
-        .select(F.col("cid").alias("cluster"))
+        .select("cluster")
     )
     hits = assigned.join(F.broadcast(probes), "cluster")
     return (

@@ -269,14 +269,17 @@ def stop_scratch_server() -> None:
 # the distributed COPY sink
 
 
-def _ddl_for(df: DataFrame, table: str, mode: str) -> list[str]:
+def _ddl_for(df: DataFrame, table: str, mode: str) -> str:
+    """The load's DDL as one string: psql runs a multi-statement ``-c``
+    as one transaction, so a replace whose CREATE fails keeps the old
+    table."""
     cols = ", ".join(f'"{f.name}" {pg_type(f.dataType)}' for f in df.schema.fields)
     if mode == "replace":
-        return [f"DROP TABLE IF EXISTS {table}", f"CREATE TABLE {table} ({cols})"]
+        return f"DROP TABLE IF EXISTS {table}; CREATE TABLE {table} ({cols})"
     if mode == "append":
-        return [f"CREATE TABLE IF NOT EXISTS {table} ({cols})"]
+        return f"CREATE TABLE IF NOT EXISTS {table} ({cols})"
     if mode == "fail":
-        return [f"CREATE TABLE {table} ({cols})"]  # errors if it exists
+        return f"CREATE TABLE {table} ({cols})"  # errors if it exists
     raise ValueError(f"mode must be fail/replace/append, got {mode!r}")
 
 
@@ -472,9 +475,10 @@ def copy_into_postgres(
 ) -> int:
     """Bulk-load ``df`` into ``table`` via parallel COPY; returns rows loaded.
 
-    The driver runs the DDL (reference mode semantics, app.py:21), then
-    loads by one of two paths, chosen by :func:`_parquet_splits` on the
-    frame exactly as it would be loaded:
+    The driver runs the DDL (reference mode semantics, app.py:21) as one
+    transaction, so a replace whose CREATE fails keeps the old table;
+    then it loads by one of two paths, chosen by :func:`_parquet_splits`
+    on the frame exactly as it would be loaded:
 
     - **Parquet path** — ``df`` is a bare parquet scan (optionally a
       column projection) whose file schema is exactly what Spark would
@@ -505,8 +509,7 @@ def copy_into_postgres(
     path. A failed load raises with the failing stream's psql stderr,
     but rows that other streams already committed stay in the table.
     """
-    for stmt in _ddl_for(df, table, mode):
-        _run_psql(dsn, stmt)
+    _run_psql(dsn, _ddl_for(df, table, mode))
 
     col_list = ", ".join(f'"{f.name}"' for f in df.schema.fields)
     copy_sql = f"COPY {table} ({col_list}) FROM STDIN WITH (FORMAT csv)"

@@ -20,9 +20,11 @@ from parquet_importer_spark.io import parallelize, read_table
 from parquet_importer_spark.operators.similarity import (
     bucketed_topk_pairs,
     bucketed_topk_pairs_capped,
+    cid_array,
     embedding_near_dup_pairs,
     embedding_near_dup_pairs_capped,
     ivf_topk,
+    nearest_center,
     topk_cosine,
 )
 from parquet_importer_spark.registry import query
@@ -281,7 +283,7 @@ def llm_dedup_embedding_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN, the scale path past brute force: assign every vector to
-    its nearest of 16 deterministic centroids (one slim max_by shuffle),
+    its nearest of 16 deterministic centroids (map-side, no shuffle),
     probe the 4 clusters nearest the query, exact-score only inside them
     — ~4/16 of the corpus scanned instead of all of it."""
     emb = read_table(spark, sf_dir, "embeddings")
@@ -807,37 +809,20 @@ def llm_emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """llm_semdedup's (vec_id, cluster, v, cos_centroid) assignment —
-    broadcast centroids, 64× cosine scoring collapsed by a map-side-
-    combinable max_by (no window, no row_number: the round-6 contract
-    tests/test_plans.py pins against THIS un-checkpointed frame, since
-    the query itself reads it through an r14 localCheckpoint)."""
-    from parquet_importer_spark.functions.vectors import cosine
-
-    emb = parallelize(read_table(spark, sf_dir, "embeddings"))
-    cent = emb.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-    scored = emb.crossJoin(F.broadcast(cent)).select(
+    """llm_semdedup's (vec_id, cluster, v, cos_centroid) assignment — the
+    64 centroids are collected and every vector is scored map-side by
+    nearest_center's Arrow batch kernel (no exchange, no window: the
+    contract tests/test_plans.py pins against THIS un-checkpointed
+    frame, since the query itself reads it through a localCheckpoint)."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    cent = emb.filter(F.col("vec_id") < 64).select("vec_id", "embedding")
+    return nearest_center(
+        emb.select("vec_id", F.col("embedding").alias("v")), "v", cent, "cosine"
+    ).select(
         "vec_id",
-        F.col("embedding").alias("v"),
-        "cid",
-        F.round(cosine(F.col("embedding"), F.col("cvec")), 6).alias("cosc"),
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cid", "cosc", "v"),
-                F.struct(F.col("cosc"), -F.col("cid")),
-            ).alias("best")
-        )
-        .select(
-            "vec_id",
-            F.col("best.cid").alias("cluster"),
-            F.col("best.v").alias("v"),
-            F.col("best.cosc").alias("cos_centroid"),
-        )
+        F.col("cid").alias("cluster"),
+        "v",
+        F.col("score").alias("cos_centroid"),
     )
 
 
@@ -898,26 +883,26 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SemDeDup's cost control (the paper runs k in the tens of thousands
     at corpus scale).
 
-    Scale shape: centroid table broadcasts (KB-scale); assignment is a
-    map-side-combinable groupBy + max_by over the broadcast cross join
-    (same plan as IVF, operators/similarity.py — the 64× candidate
-    expansion collapses to ONE row per vector BEFORE any exchange;
-    no window, no row_number, pinned in test_plans.py); the pairwise
-    stage only runs inside clusters whose size is in [2, 256] — the
-    max-cluster cap (mirrored in the oracle's HAVING) bounds any
+    Scale shape: the centroid table is collected (KB-scale) and the
+    assignment is operators/similarity.nearest_center, the same Arrow
+    batch kernel as IVF and PQ — each vector is scored against all 64
+    centroids map-side, with no cross join, no exchange and no window
+    (pinned in test_plans.py); the pairwise stage only runs inside
+    clusters whose size is in [2, 256] — the max-cluster cap (mirrored in the oracle's HAVING) bounds any
     degenerate cluster exactly like the LSH max_bucket valve, so one
     all-zero-embedding cluster can never go quadratic."""
     from parquet_importer_spark.functions.vectors import cosine
 
     # four plan branches read the assignment (cluster census, both
     # pair sides, the final verdict join); without a checkpoint the
-    # 64x broadcast-cosine scoring + max_by aggregate re-executes
-    # per branch (measured r14: 35 stages / 4x the assignment
-    # exchange at sf0.1 — guide §2.4, share one computation).
-    # Lazy: the first consumer's job materializes it. The assignment
-    # plan itself (broadcast centroids, map-side max_by, no window) is
-    # pinned by tests/test_plans.py against _semdedup_assignment.
-    assigned = _semdedup_assignment(spark, sf_dir).localCheckpoint(
+    # 64-centroid scoring re-executes per branch (guide §2.4, share
+    # one computation). The assignment plan itself (one Python map, no
+    # exchange, no window) is pinned by tests/test_plans.py against
+    # _semdedup_assignment. It runs as one task over a one-row-group
+    # scan, which the kernel makes cheap; parallelize AFTER it so the
+    # pairwise cosine stage gets every core (measured at sf0.1: ~1.6 s
+    # per query against ~2.1 s with the whole pipeline in one task).
+    assigned = parallelize(_semdedup_assignment(spark, sf_dir)).localCheckpoint(
         eager=False
     )
     ok = (
@@ -1284,67 +1269,39 @@ def llm_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 embeddings, ties by centroid id; swap in learned sub-centroids
     exactly as llm_sim_ivf_kmeans does) keeps every encode and score
     oracle-reproducible: subdistances are identical left folds rounded
-    to 6, the argmin is MIN over [dist, cid] arrays (lexicographic —
-    the tie rule is IN the data), and the 4-term ADC sum accumulates
-    in decimal so grouping order cannot matter.
+    to 6, the argmin takes the smallest rounded distance with ties to
+    the lower cid (the oracle's lexicographic MIN over [dist, cid]
+    arrays), and the 4-term ADC sum accumulates in decimal so grouping
+    order cannot matter.
 
-    Scale shape: the codebook (KB) broadcasts into the one-pass encode
-    aggregation; the ADC table is 64 rows broadcast into the melted
-    (vector, subspace, code) join; scoring never reads raw vectors —
+    Scale shape: the codebook (KB) is collected and the encode is one
+    map-side pass of operators/similarity.nearest_center over all four
+    sub-spaces (no exchange); the ADC table is the same kernel on the
+    query, 64 rows broadcast into the melted (vector, subspace, code)
+    join; scoring never reads raw vectors —
     at 100 TB the encode output (4 ints/vector) IS the stored index,
     and queries cost a table lookup + TakeOrderedAndProject."""
-    emb = parallelize(read_table(spark, sf_dir, "embeddings"))
-    cb = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-
-    def subdist(vec, cvec, j):
-        a = F.slice(vec, j * 16 + 1, 16)
-        b = F.slice(cvec, j * 16 + 1, 16)
-        return F.round(
-            F.aggregate(
-                F.zip_with(
-                    a,
-                    b,
-                    lambda x, y: (x.cast("double") - y.cast("double"))
-                    * (x.cast("double") - y.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        )
-
-    enc = (
-        emb.crossJoin(F.broadcast(cb))
-        .groupBy("vec_id")
-        .agg(
-            *[
-                F.min(
-                    F.array(
-                        subdist(F.col("embedding"), F.col("cvec"), j),
-                        F.col("cid").cast("double"),
-                    )
-                )
-                .getItem(1)
-                .cast("int")
-                .alias(f"c{j}")
-                for j in range(4)
-            ]
-        )
+    emb = read_table(spark, sf_dir, "embeddings")
+    vecs = emb.select("vec_id", "embedding")
+    cb = sorted(tuple(r) for r in vecs.filter(F.col("vec_id") < 16).collect())
+    enc = nearest_center(vecs, "embedding", cb, "dist2", slices=4).select(
+        "vec_id", *[F.col(f"cid{j}").cast("int").alias(f"c{j}") for j in range(4)]
     )
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qvec")
     )
+    # ADC table: every (sub-space j, cid) entry of the query's scores,
+    # which nearest_center lays out slice-major (j·k + cid position)
+    k = len(cb)
     adc = (
-        cb.crossJoin(F.broadcast(q))
+        nearest_center(q, "qvec", cb, "dist2", slices=4)
+        .select(F.posexplode("scores").alias("p", "tdist"))
         .select(
-            "cid",
-            F.posexplode(
-                F.array(
-                    *[subdist(F.col("qvec"), F.col("cvec"), j) for j in range(4)]
-                )
-            ).alias("j", "tdist"),
+            F.element_at(cid_array([c for c, _ in cb]), F.col("p") % k + 1).alias(
+                "cid"
+            ),
+            (F.col("p") / k).cast("int").alias("j"),
+            "tdist",
         )
     )
     melted = enc.select(
@@ -1526,15 +1483,13 @@ def llm_cluster_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break; centroid means accumulate DECIMAL(30,8), snap back to
     the grid, and divide once (registry exact_avg shape).
 
-    Scale shape: per round ONE broadcast of the k×dim centroid table
-    against the un-shuffled corpus (map-side assignment, the
-    llm_semdedup join shape) and ONE partial-aggregatable
-    (cluster, pos) mean — the canonical distributed Lloyd round; the
-    corpus localCheckpoints once for its three consumers. k and the
-    round count are the only cost knobs at 100 TB; nothing is
-    quadratic in n."""
-    from parquet_importer_spark.functions.vectors import dist2  # noqa: PLC0415
-
+    Scale shape: per round the k×dim centroid table is collected and
+    scored against the un-shuffled corpus map-side
+    (operators/similarity.nearest_center, the llm_semdedup assignment)
+    and ONE partial-aggregatable (cluster, pos) mean — the canonical
+    distributed Lloyd round; the corpus localCheckpoints once for its
+    three consumers. k and the round count are the only cost knobs at
+    100 TB; nothing is quadratic in n."""
     emb = read_table(spark, sf_dir, "embeddings")
     xv = emb.select(
         "vec_id",
@@ -1544,29 +1499,18 @@ def llm_cluster_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
     def assign(df: DataFrame, cent: DataFrame, label: str) -> DataFrame:
-        d = F.round(dist2(F.col("v"), F.col("cvec")), 6)
-        best = F.min(F.struct(d.alias("d"), F.col("cid").alias("cid")))
-        keep = [f for f in df.columns if f != "v"]
-        return (
-            df.crossJoin(F.broadcast(cent))
-            .groupBy("vec_id")
-            .agg(
-                best.alias("best"),
-                *[F.any_value(c).alias(c) for c in keep if c != "vec_id"],
-                F.any_value("v").alias("v"),
-            )
-            .select(
-                *keep,
-                "v",
-                F.col("best.cid").alias(label),
-                F.col("best.d").alias(f"{label}_d"),
-            )
+        return nearest_center(df, "v", cent, "dist2").select(
+            *df.columns,
+            F.col("cid").alias(label),
+            F.col("score").alias(f"{label}_d"),
         )
 
     c0 = xv.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cvec")
     )
-    a1 = assign(xv, c0, "cluster_r1")
+    # read by the c1 collect and by a2: checkpoint so the first
+    # assignment's kernel runs once
+    a1 = assign(xv, c0, "cluster_r1").localCheckpoint(eager=False)
     m = (
         a1.select(F.col("cluster_r1").alias("cid"), F.posexplode("v"))
         .groupBy("cid", "pos")

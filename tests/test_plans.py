@@ -468,24 +468,24 @@ def _semdedup_assignment_plan(spark):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_semdedup_broadcasts_centroids(spark):
-    """The centroid table must broadcast into the assignment cross join
-    — a shuffled join against a 16-row table is the scale failure."""
-    assert "BroadcastExchange" in _semdedup_assignment_plan(spark)
+def test_semdedup_assignment_has_no_exchange(spark):
+    """The centroids are collected and every vector is scored map-side,
+    so the assignment plans no exchange at all — neither the broadcast
+    of the centroid table nor the per-vector max_by shuffle of the
+    cross join it replaced."""
+    plan = _semdedup_assignment_plan(spark)
+    assert "Exchange" not in plan, "semdedup assignment must not shuffle"
+    assert "NestedLoopJoin" not in plan
 
 
-def test_semdedup_assignment_is_maxby_not_window(spark):
-    """Round-6 contract: cluster assignment collapses the 64× candidate
-    expansion with a map-side-combinable groupBy+max_by — a Window/
-    row_number over the expansion would shuffle 64 copies of every
-    embedding (round-5 verdict, What's wrong #3)."""
+def test_semdedup_assignment_is_one_python_map_not_window(spark):
+    """Round-6 contract, tightened: no Window/row_number over a 64×
+    candidate expansion (round-5 verdict, What's wrong #3) — and now no
+    expansion at all: exactly one Arrow batch kernel (MapInArrow)."""
     plan = _semdedup_assignment_plan(spark)
     assert "Window" not in plan, "semdedup must not plan a window"
     assert "row_number" not in plan
-    # the max_by partial agg must appear below the exchange
-    assert "partial_max_by" in plan or "partial_maxby" in plan.lower() or (
-        "HashAggregate" in plan and "max_by" in plan
-    )
+    assert plan.count("MapInArrow") == 1
 
 
 @pytest.mark.parametrize("name", ["agg_kmv_distinct", "agg_kmv_union"])

@@ -93,6 +93,20 @@ def test_modes_fail_replace_append(spark, dsn, sf_dir):
     _run_psql(dsn, "DROP TABLE t_modes")
 
 
+def test_failed_replace_keeps_the_old_table(spark, dsn):
+    """Replace runs DROP and CREATE as one transaction: a CREATE the
+    server rejects (duplicate column names) leaves the old table and
+    its rows in place instead of no table at all."""
+    copy_into_postgres(
+        spark.createDataFrame([(1,), (2,)], "id int"), dsn, "t_keep", mode="replace"
+    )
+    bad = spark.createDataFrame([(1, 2)], ["a", "a"])
+    with pytest.raises(RuntimeError, match="specified more than once"):
+        copy_into_postgres(bad, dsn, "t_keep", mode="replace")
+    assert _count(dsn, "t_keep") == 2
+    _run_psql(dsn, "DROP TABLE t_keep")
+
+
 def test_full_content_roundtrip(spark, dsn, sf_dir):
     n = read_table(spark, sf_dir, "nation")
     copy_into_postgres(n, dsn, "t_content", mode="replace", num_partitions=4)

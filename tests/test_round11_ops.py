@@ -125,6 +125,29 @@ def test_parallelize_counts_row_groups_not_byte_splits(spark, tmp_path):
     assert _parquet_row_groups(spark.read.schema("a int").csv(csv)) is None
 
 
+def test_parallelize_below_target_row_groups_plans_no_rdd(spark, tmp_path, monkeypatch):
+    """Footer row groups below the target decide the repartition on
+    their own (effective splits ≤ row groups), so parallelize must not
+    plan the byte-range split count — ``df.rdd`` costs ~65 ms a plan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_importer_spark.io import parallelize
+
+    path = str(tmp_path / "one_rg.parquet")
+    pq.write_table(pa.table({"v": list(range(100))}), path)
+    df = spark.read.parquet(path)
+
+    def no_rdd(self):
+        raise AssertionError("parallelize planned df.rdd")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(df), "rdd", property(no_rdd))
+        out = parallelize(df, min_partitions=2)
+    assert out.rdd.getNumPartitions() == 2
+    assert out.count() == 100
+
+
 def test_embedding_capped_is_noop_at_driver_sf(spark):
     """llm_dedup_embedding_capped equals the exact form bit-for-bit at
     the driver SF (every bucket under the cap), and a forced tiny cap

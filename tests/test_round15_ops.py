@@ -97,6 +97,26 @@ def test_pagerank_single_exchange_matches_reference(spark):  # noqa: F811
     assert got == want  # exact double equality, not approx
 
 
+def test_pagerank_edges_to_absent_nodes_drop_their_mass(spark):  # noqa: F811
+    """An edge whose endpoint is not in ``nodes`` used to open a second
+    NULL-out_deg group that passed for the dangling row, so the cross
+    join multiplied every rank (3 nodes + 2 such edges: 9 rows). The
+    mass sent to absent nodes is dropped instead, as the SQL oracle's
+    base LEFT JOIN does: one row per node, equal to the reference."""
+    from parquet_importer_spark.operators.graph import pagerank
+
+    nodes = spark.createDataFrame([(i,) for i in range(3)], "id long")
+    pairs = [(0, 1), (1, 2), (0, 7), (1, 9)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    rows = pagerank(nodes, edges, n_iter=4).collect()
+    assert len(rows) == 3
+    want = {
+        r.node: r.rank
+        for r in _reference_pagerank(nodes, edges, n_iter=4).collect()
+    }
+    assert {r.node: r.rank for r in rows} == want
+
+
 def test_kmeans_centroids_partitioning_invariant(spark):  # noqa: F811
     """The r15 hand-rolled Lloyd fit must produce IDENTICAL centers
     regardless of input partitioning — the decimal-exact snapped means

@@ -74,12 +74,12 @@ SHOWCASE = (
     ("ts_cross_correlation", "lagged cross-correlation: raw events reduce once to (type, hour); the 4-lag fan-out is a broadcast crossJoin of a 4-row frame and the lag join + moments run on |types|x|hours| rows — decimal-promoted products after the round-12 overflow find (sf100 10.2 s / xlin_c 1.01)"),
     # round 5 additions
     ("llm_dedup_affine", "production 128-hash profile: one md5 per shingle + affine re-mix; slim (band,key,doc) shuffle unchanged"),
-    ("llm_semdedup", "centroids broadcast; max_by partial-agg assignment (no window over the 64x expansion); [2,256] cluster cap gates the pair join"),
+    ("llm_semdedup", "centroids collected; one MapInArrow nearest-center assignment (no exchange, no window); [2,256] cluster cap gates the pair join"),
     ("llm_ngram_perplexity", "two count aggs build the LM; scoring = two hash joins + 1-row vocab broadcast + per-doc rollup"),
     ("win_gaps_islands", "dense_rank window and both island rollups on ONE o_custkey exchange"),
     ("llm_quality_calibrated", "percent_rank on a single source-keyed exchange"),
     ("llm_dedup_bottomk", "bottom-k probes vs capped inverted shingle index; exact containment verify joins back"),
-    ("llm_sim_pq", "KB codebook broadcast into one-pass encode agg; 64-row ADC table broadcast into the code join"),
+    ("llm_sim_pq", "KB codebook collected; one MapInArrow encodes all four sub-spaces (no exchange); 64-row ADC table broadcast into the code join"),
     ("join_interval_bucketed", "two fact interval sets: equi-join on (user_id, bucket) + residual overlap — no NestedLoop"),
     # round 5 late additions
     ("llm_line_dedup", "slim (md5,doc,pos) shuffle; groupBy-min owner table; AQE-broadcastable membership join; per-doc rollup"),
@@ -91,7 +91,7 @@ SHOWCASE = (
     # round 6 additions
     ("agg_kmv_distinct", "two-stage min-k: (grp,bucket) windows first (5*64-way parallel), group rank over <=k*P survivors — no whole-group sort"),
     # round 7 additions
-    ("llm_cluster_kmeans_exact", "per Lloyd round: k x dim centroid table broadcast against the un-shuffled corpus; (cluster,pos) partial-agg mean"),
+    ("llm_cluster_kmeans_exact", "per Lloyd round: k x dim centroid table collected and scored map-side (MapInArrow) against the un-shuffled corpus; the (cluster,pos) partial-agg mean runs in the build's centroid collect, so the final plan is one MapInArrow with no exchange"),
     ("graph_lpa_communities", "per LPA round: one slim (node,label) shuffle + composite-ordered min_by hash aggregate — no window, no sort"),
     ("ts_double_ewma_forecast", "row_number + both 8-row window passes ride ONE (series, order) exchange+sort; integer Horner folds"),
     ("spatial_geohash_join", "BroadcastHashJoin on the integer cell id — the equi-prefilter replacing nested-loop range predicates; residual bbox filter post-join"),
