@@ -9,6 +9,18 @@ so the same plans scale to a multi-executor cluster:
   columnar batches, not rows.
 - ``spark.sql.shuffle.partitions`` is only the *initial* value — AQE
   coalesces down; on a real cluster set it ~2-3× total cores.
+- Local masters only: ``spark.python.daemon.module`` is
+  ``worker_daemon/zipcache_daemon.py``. Up to Python 3.12,
+  ``importlib.invalidate_caches()``, which PySpark calls at the start of
+  every Python task, re-reads each zip archive on the worker's path
+  (``pyspark.zip``, the py4j zip, the spark-core jar: 26,672 directory
+  entries), ~0.2 s per task on a 4-core host; that daemon's workers
+  re-read an archive only when it changed. It is the daemon module, not
+  the worker module, because PySpark imports a worker module only if
+  its name starts with ``pyspark``. Its directory reaches the workers
+  through ``spark.executorEnv.PYTHONPATH``, a path on the driver's host
+  that a cluster's executors do not have, so other masters keep
+  PySpark's own daemon.
 """
 
 from __future__ import annotations
@@ -16,6 +28,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# holds zipcache_daemon.py and nothing else, so the workers' path gains
+# no package (closures stay self-contained)
+_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_daemon")
 
 
 def get_spark(
@@ -31,9 +47,10 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -49,6 +66,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config(
+            "spark.python.daemon.module", "zipcache_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _DAEMON_DIR)
     # Streaming TEMP checkpoints (memory-sink queries that set no
     # explicit checkpointLocation — every such query here carries a
     # uuid queryName, so runs never share state): default java.io.tmpdir

@@ -537,10 +537,11 @@ def copy_into_postgres(
             _split_loader(stream, splits, src.columns, k),
             schema="rows_loaded long",
         )
-    # the aggregate is the ACTION that runs the load — and its result is
-    # the executor-side audit total the caller cross-checks in-database
-    total = audit.groupBy().sum("rows_loaded").first()[0]
-    return int(total or 0)
+    # collecting the per-task audit rows is the ACTION that runs the load,
+    # in one stage (a groupBy().sum() would add an exchange and a second
+    # stage); their sum is the executor-side total the caller
+    # cross-checks in-database
+    return sum(r[0] for r in audit.collect())
 
 
 def read_back(
