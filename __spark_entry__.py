@@ -50,6 +50,9 @@ _FORCE_RECHECK: dict[str, int] = {
     "llm_sim_pq": 16,
     "llm_cluster_kmeans_exact": 16,
     "graph_pagerank": 16,
+    # the shared in_bucket_pairs expression replaced its hand-written
+    # pair expansion (same plan modulo expression ids)
+    "llm_source_overlap": 16,
 }
 
 

@@ -9,6 +9,12 @@ Four public schemes, each built scale-first:
   generation is an equi-join on band keys — the pairwise step only ever
   sees hash-colliding docs. This is the standard shingle→minhash→band
   →bucket-join pipeline; at 100 TB the band join is the only wide op.
+  Every MinHash operator here (Jaccard, affine, containment,
+  cross-corpus, edit distance) is written once as the same steps:
+  ``_lsh_base`` (shingles + digests) → ``_band_keys`` (seeded-md5 or
+  affine signatures) → ``_band_candidates`` (bucket pairs via
+  :func:`in_bucket_pairs`) → ``_jaccard_verify``; only the verify
+  metric differs.
 - **SimHash**: 16-bit signature as a pure array fold, no shuffle at all.
 - **n-gram Jaccard**: inverted-index join on shingles (candidate pairs
   share ≥1 shingle), exact |∩|/|∪| on the pruned pair set.
@@ -19,6 +25,8 @@ seed-dependent MinHashLSH (kept as a rows-only alt in suite/llm_dedup).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -61,44 +69,120 @@ MINHASH_PROFILES: dict[str, dict[str, int]] = {
 }
 
 
-def _seeded_shingle_md5(shingle_arr: Column, seed: Column) -> Column:
-    return F.transform(
-        shingle_arr,
-        lambda g: F.md5(F.concat(F.lit("s"), seed.cast("string"), F.lit("|"), g)),
+def in_bucket_pairs(arr_col: str, left: str, right: str) -> Column:
+    """Every pair of a bucket's array column as ``struct<left, right>``,
+    left element before right in array order — the triangular in-bucket
+    expansion behind every bucket/posting pair generator. Sort the array
+    first and ``left < right`` holds for distinct elements."""
+    arr = F.col(arr_col)
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)),
+                lambda y: F.struct(x.alias(left), y.alias(right)),
+            ),
+        )
     )
 
 
-def _banded_keys(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc, sh[, extra cols]) → slim (doc, …, band, key) LSH band rows.
+#: affine universal-hash family parameters: p is the Mersenne prime
+#: 2^31−1; per-seed multipliers/offsets derive from fixed public mixing
+#: constants (Knuth 2654435761, 40503) reduced mod p. With the 28-bit
+#: md5-prefix base hash, a·h+b < 2^59 — exact BIGINT on every engine.
+AFFINE_P = 2_147_483_647
+AFFINE_MULT = 2_654_435_761
+AFFINE_OFF = 40_503
 
-    Each band's key joins rows_per_band seeded-minhash minima; the
-    shingle array (the wide payload) is dropped before any shuffle.
-    Every seeded hash pass runs exactly once across bands."""
+
+def _md5_seed_min(s: Column) -> Column:
+    """Seeded-md5 family: min over the shingles of md5('s<seed>|' || g)."""
+    return F.array_min(
+        F.transform(
+            F.col("sh"),
+            lambda g: F.md5(F.concat(F.lit("s"), s.cast("string"), F.lit("|"), g)),
+        )
+    )
+
+
+def _affine_seed_min(s: Column) -> Column:
+    """Affine family: min over the base hashes ``hv`` of
+    (a_s·H(g) + b_s) mod p, a_s = MULT·(s+1) mod p, b_s = OFF·(2s+1) mod p."""
+    a = F.pmod(F.lit(AFFINE_MULT) * (s + 1), F.lit(AFFINE_P))
+    b = F.pmod(F.lit(AFFINE_OFF) * (2 * s + 1), F.lit(AFFINE_P))
+    return F.array_min(
+        F.transform(F.col("hv"), lambda h: F.pmod(a * h + b, F.lit(AFFINE_P)))
+    ).cast("string")
+
+
+def _band_keys(
+    num_hashes: int, bands: int, affine: bool = False
+) -> Callable[[DataFrame], DataFrame]:
+    """Check the band contract and return the band-row builder:
+    (doc, sh[, extra cols]) → slim (doc, …, band, key) LSH band rows.
+
+    Band b's key joins the per-seed minima of seeds
+    b·r … (b+1)·r − 1 with '|', r = num_hashes / bands; the shingle
+    array (the wide payload) is dropped before any shuffle, and every
+    seed's pass runs exactly once across bands. Raises ValueError
+    unless ``bands ≥ 1`` splits ``num_hashes`` into equal bands of
+    r ≥ 1 hashes — a silent floor would build every key from seeds
+    [0, −1] (r = 0) or drop the trailing hashes.
+
+    Two signature families, byte-identical to their SQL oracles:
+
+    - seeded md5 (default): one md5 pass per seed over the shingles;
+    - ``affine``: ONE md5 per shingle, H(g) = int(md5(g)[:7], 16), and
+      h_s(g) = (a_s·H(g) + b_s) mod p for every seed — the classic
+      universal family, ~``num_hashes``× less signature work at the
+      128-hash production profile. The trade is base-hash collisions
+      (2^28 space) merging a negligible fraction of distinct shingles —
+      widen the prefix and lift p to a 61-bit prime for >10^7-shingle
+      corpora. All arithmetic is exact BIGINT (a·h+b < 2^59).
+    """
+    if bands < 1 or num_hashes < bands or num_hashes % bands:
+        raise ValueError(
+            f"num_hashes={num_hashes} must split into bands={bands} equal "
+            "bands of at least one hash"
+        )
     rows_per_band = num_hashes // bands
-    other = [c for c in base.columns if c != "sh"]
-    return base.select(
-        *other,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.cast("int").alias("band"),
-                    F.array_join(
-                        F.transform(
-                            F.sequence(
-                                b * rows_per_band,
-                                (b + 1) * rows_per_band - 1,
-                            ),
-                            lambda s: F.array_min(
-                                _seeded_shingle_md5(F.col("sh"), s)
-                            ),
-                        ),
-                        "|",
-                    ).alias("key"),
+    seed_min = _affine_seed_min if affine else _md5_seed_min
+
+    def build(base: DataFrame) -> DataFrame:
+        other = [c for c in base.columns if c != "sh"]
+        if affine:
+            base = base.withColumn(
+                "hv",
+                F.transform(
+                    F.col("sh"),
+                    lambda g: F.conv(F.substring(F.md5(g), 1, 7), 16, 10).cast(
+                        "bigint"
+                    ),
                 ),
             )
-        ).alias("bk"),
-    ).select(*other, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        return base.select(
+            *other,
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(bands - 1)),
+                    lambda b: F.struct(
+                        b.cast("int").alias("band"),
+                        F.array_join(
+                            F.transform(
+                                F.sequence(
+                                    b * rows_per_band,
+                                    (b + 1) * rows_per_band - 1,
+                                ),
+                                seed_min,
+                            ),
+                            "|",
+                        ).alias("key"),
+                    ),
+                )
+            ).alias("bk"),
+        ).select(*other, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+    return build
 
 
 def _verify_hash_arr(sh: Column) -> Column:
@@ -125,6 +209,136 @@ def _verify_hash_arr(sh: Column) -> Column:
     )
 
 
+def _lsh_base(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(doc, sh, vh): each doc's k-shingle array and its 60-bit verify
+    digests (:func:`_verify_hash_arr`), checkpointed so the band keys
+    and both verify sides read one shingle pass instead of three — at
+    production scale this is the written digest artifact.
+
+    Not lazy: ``parallelize`` repartitions an under-split input, and
+    under AQE building the checkpoint's RDD runs that shuffle while the
+    DataFrame is built (one job per build at sf0.001); the checkpointed
+    partitions themselves are filled by the first action."""
+    return (
+        parallelize(df)
+        .select(
+            F.col(id_col).alias("doc"),
+            shingles(F.col(text_col), k).alias("sh"),
+        )
+        .withColumn("vh", _verify_hash_arr(F.col("sh")))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _band_candidates(banded: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(doc, band, key) band rows → (d1, d2, n_shared_bands), d1 < d2.
+
+    Bucket-group pair generation instead of a self-join: one slim
+    shuffle on (band, key), pairs built inside each sorted bucket, one
+    count per pair over the bands it shares. ``max_bucket`` drops
+    buckets larger than the cap before pair expansion — the valve that
+    bounds a degenerate bucket of B docs (B²/2 candidates)."""
+    buckets = (
+        banded.groupBy("band", "key")
+        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
+        .filter(F.size("docs") >= 2)
+    )
+    if max_bucket is not None:
+        buckets = buckets.filter(F.size("docs") <= max_bucket)
+    return (
+        buckets.select(F.explode(in_bucket_pairs("docs", "d1", "d2")).alias("p"))
+        .select("p.d1", "p.d2")
+        .groupBy("d1", "d2")
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    col: str = "vh",
+    hint: str | None = None,
+) -> tuple[DataFrame, Column, Column]:
+    """Join both docs' sets (``col`` of ``left``/``right`` as sh1/sh2)
+    onto the (d1, d2, …) candidates; returns (frame, |∩|, |∪|) as
+    doubles. ``hint`` is a join-strategy hint for both set sides."""
+    s1 = left.select(F.col("doc").alias("d1"), F.col(col).alias("sh1"))
+    s2 = right.select(F.col("doc").alias("d2"), F.col(col).alias("sh2"))
+    if hint is not None:
+        s1, s2 = s1.hint(hint), s2.hint(hint)
+    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
+    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
+    return cand.join(s1, "d1").join(s2, "d2"), inter, union
+
+
+def _jaccard_filter(
+    verified: DataFrame,
+    inter: Column,
+    union: Column,
+    threshold: float,
+    ids: tuple[str, str] = ("id_1", "id_2"),
+) -> DataFrame:
+    """Keep pairs with Jaccard ≥ threshold: (ids…, n_shared_bands, jaccard)."""
+    return (
+        verified.withColumn("jaccard", F.round(inter / union, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select(
+            F.col("d1").alias(ids[0]),
+            F.col("d2").alias(ids[1]),
+            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
+            "jaccard",
+        )
+    )
+
+
+def _containment_filter(
+    verified: DataFrame,
+    inter: Column,
+    union: Column,
+    threshold: float,
+    count_col: str,
+) -> DataFrame:
+    """Keep pairs where either direction's containment |A∩B|/|A| clears
+    the threshold: (id_1, id_2, count_col, containment_1in2,
+    containment_2in1, jaccard)."""
+    c12 = F.round(inter / F.size("sh1").cast("double"), 6)
+    c21 = F.round(inter / F.size("sh2").cast("double"), 6)
+    return (
+        verified.withColumn("containment_1in2", c12)
+        .withColumn("containment_2in1", c21)
+        .withColumn("jaccard", F.round(inter / union, 6))
+        .filter(
+            (F.col("containment_1in2") >= threshold)
+            | (F.col("containment_2in1") >= threshold)
+        )
+        .select(
+            F.col("d1").alias("id_1"),
+            F.col("d2").alias("id_2"),
+            F.col(count_col).cast("bigint").alias(count_col),
+            "containment_1in2",
+            "containment_2in1",
+            "jaccard",
+        )
+    )
+
+
+def _lsh_verified(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    band_keys: Callable[[DataFrame], DataFrame],
+    k: int,
+    max_bucket: int | None,
+) -> tuple[DataFrame, Column, Column]:
+    """The shared LSH body: shingle base → band keys → bucket
+    candidates → both docs' digest sets, as :func:`_jaccard_verify`
+    returns them; callers only pick the verify metric."""
+    base = _lsh_base(df, text_col, id_col, k)
+    cand = _band_candidates(band_keys(base.select("doc", "sh")), max_bucket)
+    return _jaccard_verify(cand, base, base)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -137,9 +351,10 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
-    rows_per_band = num_hashes // bands. Two docs become a candidate
-    pair iff some band of their signatures is identical; candidates are
-    then verified with exact shingle-set Jaccard and filtered.
+    rows_per_band = num_hashes / bands (``bands`` must divide
+    ``num_hashes``). Two docs become a candidate pair iff some band of
+    their signatures is identical; candidates are then verified with
+    exact shingle-set Jaccard and filtered.
     Returns (id_1, id_2, n_shared_bands, jaccard), id_1 < id_2.
 
     ``max_bucket`` drops band buckets larger than the cap before pair
@@ -150,138 +365,10 @@ def minhash_lsh_pairs(
     adversarial hot bucket at scale is bounded at ~50M pairs. Tune DOWN
     per corpus; ``None`` disables (exact, unbounded).
     """
-    rows_per_band = num_hashes // bands
-    # materialize the shingle table + its 60-bit verify digests ONCE:
-    # three branches consume it (band keys, both verify sides) and
-    # would otherwise each re-tokenize and re-shingle the corpus, the
-    # verify sides additionally re-hashing every gram (r14; the
-    # materialize-once discipline bottomk_containment_pairs already
-    # documents — at production scale this IS the written digest
-    # artifact). Lazy: the first consumer's job materializes it.
-    base = (
-        parallelize(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            shingles(F.col(text_col), k).alias("sh"),
-        )
-        .withColumn("vh", _verify_hash_arr(F.col("sh")))
-        .localCheckpoint(eager=False)
+    verified = _lsh_verified(
+        df, text_col, id_col, _band_keys(num_hashes, bands), k, max_bucket
     )
-    # Candidate generation over SLIM (doc, band, key) rows only — the
-    # shingle arrays (the wide payload) never enter the band shuffle.
-    banded = _banded_keys(base.select("doc", "sh"), num_hashes, bands)
-
-    # Bucket-group pair generation instead of a self-join: one pass over
-    # the minhash pipeline, one slim shuffle on (band, key), pairs built
-    # inside each bucket. LSH keeps buckets small; at production scale
-    # add a bucket-size cap here to bound any adversarial hot bucket.
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    # Exact-Jaccard verify: join shingle sets back onto the candidate
-    # set, carrying the slim 60-bit int representation (_verify_hash_arr
-    # — the round-11 sf30 fix; same set metrics, ~4× lighter exchange).
-    s1 = base.select(F.col("doc").alias("d1"), F.col("vh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("vh").alias("sh2"))
-    verified = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select(
-            F.col("d1").alias("id_1"),
-            F.col("d2").alias("id_2"),
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            "jaccard",
-        )
-    )
-
-
-#: affine universal-hash family parameters: p is the Mersenne prime
-#: 2^31−1; per-seed multipliers/offsets derive from fixed public mixing
-#: constants (Knuth 2654435761, 40503) reduced mod p. With the 28-bit
-#: md5-prefix base hash, a·h+b < 2^59 — exact BIGINT on every engine.
-AFFINE_P = 2_147_483_647
-AFFINE_MULT = 2_654_435_761
-AFFINE_OFF = 40_503
-
-
-def _affine_banded_keys(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc, sh[, extra]) → slim (doc, …, band, key) LSH band rows with
-    ONE md5 per shingle total, vs :func:`_banded_keys`' ``num_hashes``
-    md5 passes.
-
-    The signature family is h_s(g) = (a_s·H(g) + b_s) mod p over a
-    single 28-bit base hash H(g) = int(md5(g)[:7], 16) — the classic
-    universal family (a_s = MULT·(s+1) mod p, b_s = OFF·(2s+1) mod p).
-    At the 128-hash production profile this cuts signature cost ~128×;
-    the trade is base-hash collisions (2^28 space) merging a negligible
-    fraction of distinct shingles — widen the prefix and lift p to a
-    61-bit prime for >10^7-shingle corpora. All arithmetic is exact
-    BIGINT (max a·h+b < 2^59) so a SQL oracle reproduces every band key.
-    """
-    rows_per_band = num_hashes // bands
-    other = [c for c in base.columns if c != "sh"]
-    with_hv = base.withColumn(
-        "hv",
-        F.transform(
-            F.col("sh"),
-            lambda g: F.conv(F.substring(F.md5(g), 1, 7), 16, 10).cast(
-                "bigint"
-            ),
-        ),
-    )
-
-    def seed_min(s: Column) -> Column:
-        a = F.pmod(F.lit(AFFINE_MULT) * (s + 1), F.lit(AFFINE_P))
-        b = F.pmod(F.lit(AFFINE_OFF) * (2 * s + 1), F.lit(AFFINE_P))
-        return F.array_min(
-            F.transform(
-                F.col("hv"), lambda h: F.pmod(a * h + b, F.lit(AFFINE_P))
-            )
-        )
-
-    return with_hv.select(
-        *other,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bb: F.struct(
-                    bb.cast("int").alias("band"),
-                    F.array_join(
-                        F.transform(
-                            F.sequence(
-                                bb * rows_per_band,
-                                (bb + 1) * rows_per_band - 1,
-                            ),
-                            lambda s: seed_min(s).cast("string"),
-                        ),
-                        "|",
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select(*other, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    return _jaccard_filter(*verified, jaccard_threshold)
 
 
 def affine_minhash_lsh_pairs(
@@ -295,64 +382,16 @@ def affine_minhash_lsh_pairs(
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Near-duplicate pairs with the affine universal-hash MinHash —
-    identical pipeline shape, bucket caps, and verify as
+    identical pipeline, bucket caps, and verify as
     :func:`minhash_lsh_pairs`, but the signature stage hashes each
     shingle with md5 ONCE and derives all ``num_hashes`` values by
-    affine re-mixing (see :func:`_affine_banded_keys`). The scale
-    choice when signatures dominate (wide production profiles)."""
-    # materialize-once (same rationale and structure as
-    # minhash_lsh_pairs above: 3 consumers, shingle+digest computed
-    # once, lazily checkpointed)
-    base = (
-        parallelize(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            shingles(F.col(text_col), k).alias("sh"),
-        )
-        .withColumn("vh", _verify_hash_arr(F.col("sh")))
-        .localCheckpoint(eager=False)
+    affine re-mixing (see :func:`_band_keys`). The scale choice when
+    signatures dominate (wide production profiles)."""
+    verified = _lsh_verified(
+        df, text_col, id_col, _band_keys(num_hashes, bands, affine=True), k,
+        max_bucket,
     )
-    banded = _affine_banded_keys(base.select("doc", "sh"), num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    # slim int-array verify sides (round 11, shared with
-    # minhash_lsh_pairs — see _verify_hash_arr), read from the
-    # materialized digest column
-    s1 = base.select(F.col("doc").alias("d1"), F.col("vh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("vh").alias("sh2"))
-    verified = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select(
-            F.col("d1").alias("id_1"),
-            F.col("d2").alias("id_2"),
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            "jaccard",
-        )
-    )
+    return _jaccard_filter(*verified, jaccard_threshold)
 
 
 def minhash_containment_pairs(
@@ -381,68 +420,10 @@ def minhash_containment_pairs(
     sketch variant that fixes exactly that (recall 1.0 for full
     containment); the verify and output schema are shared.
     """
-    # materialize-once (same rationale and structure as
-    # minhash_lsh_pairs: 3 consumers, shingle+digest computed once,
-    # lazily checkpointed)
-    base = (
-        parallelize(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            shingles(F.col(text_col), k).alias("sh"),
-        )
-        .withColumn("vh", _verify_hash_arr(F.col("sh")))
-        .localCheckpoint(eager=False)
+    verified = _lsh_verified(
+        df, text_col, id_col, _band_keys(num_hashes, bands), k, max_bucket
     )
-    banded = _banded_keys(base.select("doc", "sh"), num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    # slim int-array verify sides (round 11, shared with
-    # minhash_lsh_pairs — see _verify_hash_arr), read from the
-    # materialized digest column
-    s1 = base.select(F.col("doc").alias("d1"), F.col("vh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("vh").alias("sh2"))
-    verified = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    c12 = F.round(inter / F.size("sh1").cast("double"), 6)
-    c21 = F.round(inter / F.size("sh2").cast("double"), 6)
-    return (
-        verified.withColumn("containment_1in2", c12)
-        .withColumn("containment_2in1", c21)
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(
-            (F.col("containment_1in2") >= containment_threshold)
-            | (F.col("containment_2in1") >= containment_threshold)
-        )
-        .select(
-            F.col("d1").alias("id_1"),
-            F.col("d2").alias("id_2"),
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            "containment_1in2",
-            "containment_2in1",
-            "jaccard",
-        )
-    )
+    return _containment_filter(*verified, containment_threshold, "n_shared_bands")
 
 
 def bottomk_containment_pairs(
@@ -527,35 +508,13 @@ def bottomk_containment_pairs(
         .groupBy("d1", "d2")
         .agg(F.count(F.lit(1)).alias("n_probe_hits"))
     )
-    s1 = base.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
     # the verify sides are the corpus-sized shingle table - wide array
     # payloads that must never be broadcast or hash-built in memory;
     # sort-merge on the id keys keeps memory flat in corpus size (same
     # OOM class as the ok/probe joins above, hit at the sf10 rung after
     # those were hinted)
-    verified = cand.join(s1.hint("merge"), "d1").join(s2.hint("merge"), "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    c12 = F.round(inter / F.size("sh1").cast("double"), 6)
-    c21 = F.round(inter / F.size("sh2").cast("double"), 6)
-    return (
-        verified.withColumn("containment_1in2", c12)
-        .withColumn("containment_2in1", c21)
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(
-            (F.col("containment_1in2") >= containment_threshold)
-            | (F.col("containment_2in1") >= containment_threshold)
-        )
-        .select(
-            F.col("d1").alias("id_1"),
-            F.col("d2").alias("id_2"),
-            F.col("n_probe_hits").cast("bigint").alias("n_probe_hits"),
-            "containment_1in2",
-            "containment_2in1",
-            "jaccard",
-        )
-    )
+    verified = _jaccard_verify(cand, base, base, "sh", "merge")
+    return _containment_filter(*verified, containment_threshold, "n_probe_hits")
 
 
 def minhash_lsh_cross_pairs(
@@ -574,7 +533,7 @@ def minhash_lsh_cross_pairs(
     candidates only, never within-side pairs.
 
     Same pipeline shape as :func:`minhash_lsh_pairs` (shared banding via
-    :func:`_banded_keys`): one slim (doc, side, band, key) shuffle, pair
+    :func:`_band_keys`): one slim (doc, side, band, key) shuffle, pair
     expansion inside each band bucket restricted to probe×corpus cross
     products, exact-Jaccard verify on the pruned candidate set. A
     within-side hot bucket (boilerplate in train) costs nothing here —
@@ -583,10 +542,9 @@ def minhash_lsh_cross_pairs(
 
     Returns (probe_id, corpus_id, n_shared_bands, jaccard).
     """
-    # materialize-once: the two-sided shingle table feeds the band
-    # keys and both verify sides — without a checkpoint each branch
-    # re-tokenizes and re-shingles both corpora (r14; same fix as
-    # minhash_lsh_pairs). Lazy: first consumer materializes.
+    band_keys = _band_keys(num_hashes, bands)
+    # the two-sided shingle table feeds the band keys and both verify
+    # sides, checkpointed as in _lsh_base
     base = parallelize(
         probe.select(
             F.col(id_col).alias("doc"),
@@ -600,9 +558,9 @@ def minhash_lsh_cross_pairs(
             )
         )
     ).localCheckpoint(eager=False)
-    banded = _banded_keys(base, num_hashes, bands)
     buckets = (
-        banded.groupBy("band", "key")
+        band_keys(base)
+        .groupBy("band", "key")
         .agg(
             F.array_sort(
                 F.collect_list(F.when(F.col("side") == "p", F.col("doc")))
@@ -632,25 +590,13 @@ def minhash_lsh_cross_pairs(
         .groupBy("d1", "d2")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
-    s1 = base.filter(F.col("side") == "p").select(
-        F.col("doc").alias("d1"), F.col("sh").alias("sh1")
+    verified = _jaccard_verify(
+        cand,
+        base.filter(F.col("side") == "p"),
+        base.filter(F.col("side") == "c"),
+        "sh",
     )
-    s2 = base.filter(F.col("side") == "c").select(
-        F.col("doc").alias("d2"), F.col("sh").alias("sh2")
-    )
-    verified = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select(
-            F.col("d1").alias("probe_id"),
-            F.col("d2").alias("corpus_id"),
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            "jaccard",
-        )
-    )
+    return _jaccard_filter(*verified, jaccard_threshold, ("probe_id", "corpus_id"))
 
 
 def simhash16(text: Column) -> Column:
@@ -728,17 +674,8 @@ def jaccard_topk_pairs(
         # NB: with a cap the intersection count is a lower bound, so
         # results become approximate (document when enabling).
         postings = postings.filter(F.size("docs") <= max_posting)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
     inter = (
-        postings.select(F.explode(pair_structs).alias("p"))
+        postings.select(F.explode(in_bucket_pairs("docs", "d1", "d2")).alias("p"))
         .groupBy("p.d1", "p.d2")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -1035,33 +972,12 @@ def minhash_editdist_pairs(
     edit_dist, edit_sim) with id_1 < id_2, keeping pairs with
     edit_dist ≤ ``max_edit``; edit_sim = 1 − d/max(len) rounded 6.
     """
+    band_keys = _band_keys(num_hashes, bands)
     base = parallelize(df).select(
         F.col(id_col).alias("doc"),
         shingles(F.col(text_col), k).alias("sh"),
     )
-    banded = _banded_keys(base, num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
+    cand = _band_candidates(band_keys(base), max_bucket)
     txt = parallelize(df).select(
         F.col(id_col).alias("doc"),
         F.substring(F.col(text_col), 1, prefix).alias("pfx"),

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from parquet_importer_spark.functions.vectors import cosine
 from parquet_importer_spark.io import parallelize
+from parquet_importer_spark.operators.dedup import in_bucket_pairs
 
 
 def _center_scorer(
@@ -324,21 +325,12 @@ def bucketed_scored_pairs(
         # scale valve: cap degenerate buckets (B docs → B²/2 pairs);
         # raise bucket_dims or add multi-probe instead of raising the cap
         buckets = buckets.filter(F.size("xs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     sim = F.when(
         (F.col("p.a.nrm") > 0) & (F.col("p.b.nrm") > 0),
         dot(F.col("p.a.v"), F.col("p.b.v")) / (F.col("p.a.nrm") * F.col("p.b.nrm")),
     ).otherwise(F.lit(0.0))
     out = buckets.select(
-        "bucket", F.explode(pair_structs).alias("p")
+        "bucket", F.explode(in_bucket_pairs("xs", "a", "b")).alias("p")
     ).select(
         "bucket",
         F.col("p.a.id").alias("id_1"),
@@ -467,22 +459,13 @@ def _capped_bucket_scored_pairs(
         .agg(F.array_sort(F.collect_list("x")).alias("xs"))
         .filter(F.size("xs") >= 2)
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     sim = F.when(
         (F.col("p.a.nrm") > 0) & (F.col("p.b.nrm") > 0),
         dot(F.col("p.a.v"), F.col("p.b.v"))
         / (F.col("p.a.nrm") * F.col("p.b.nrm")),
     ).otherwise(F.lit(0.0))
     return (
-        buckets.select("bucket", F.explode(pair_structs).alias("p"))
+        buckets.select("bucket", F.explode(in_bucket_pairs("xs", "a", "b")).alias("p"))
         .select(
             "bucket",
             F.col("p.a.id").alias("id_1"),

@@ -17,6 +17,7 @@ from parquet_importer_spark.operators.dedup import (
     connected_components,
     duplicate_span_stats,
     exact_dedup_groups,
+    in_bucket_pairs,
     jaccard_topk_pairs,
     minhash_lsh_pairs,
     normalized_text_hash,
@@ -1235,19 +1236,10 @@ def _supplier_sigma_edges(spark: SparkSession, sf_dir: str):
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("s1"), y.alias("s2")),
-            ),
-        )
-    )
     co = (
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ss"))
-        .select(F.explode(pair_structs).alias("p"))
+        .select(F.explode(in_bucket_pairs("ss", "s1", "s2")).alias("p"))
         .groupBy(F.col("p.s1").alias("s1"), F.col("p.s2").alias("s2"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )

@@ -20,6 +20,7 @@ from parquet_importer_spark.functions.text import (
     tokens,
 )
 from parquet_importer_spark.io import parallelize, read_table
+from parquet_importer_spark.operators.dedup import in_bucket_pairs
 from parquet_importer_spark.registry import (
     exact_avg,
     oracle_exact_avg,
@@ -1476,20 +1477,11 @@ def llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sz = ex.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("src_a"), y.alias("src_b")),
-            ),
-        )
-    )
     shared = (
         ex.groupBy("gram")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
         .filter(F.size("ss") >= 2)
-        .select(F.explode(pair_structs).alias("p"))
+        .select(F.explode(in_bucket_pairs("ss", "src_a", "src_b")).alias("p"))
         .groupBy(F.col("p.src_a").alias("src_a"), F.col("p.src_b").alias("src_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
     )

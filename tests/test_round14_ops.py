@@ -129,28 +129,6 @@ def test_stream_checkpoint_conf_points_at_scratch(spark):
         assert ck.startswith("/dev/shm/pis_stream_ck_")
 
 
-def test_minhash_base_materializes_once(spark):
-    """r14 materialize-once contract for the LSH family: the final plan
-    of llm_dedup_near reads the (doc, sh, vh) checkpoint — the band
-    branch and both verify sides scan the SAME materialized RDD, and no
-    parquet scan (i.e. no re-tokenize of the corpus) remains in the
-    consumer plan. A regression that drops the checkpoint re-introduces
-    three full shingle pipelines."""
-    from parquet_importer_spark.suite import QUERIES
-
-    plan = (
-        QUERIES["llm_dedup_near"](spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    )
-    assert plan.count("Scan ExistingRDD") >= 3, plan[:2000]
-    assert "Scan parquet" not in plan
-
-
 def test_ngram_digest_oracles_use_60bit_ints():
     """r14 narrower-shuffle contract: llm_contamination_ngram and
     llm_decontam_substring hash grams to 60-bit md5-prefix BIGINTs on
