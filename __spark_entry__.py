@@ -53,6 +53,16 @@ _FORCE_RECHECK: dict[str, int] = {
     # the shared in_bucket_pairs expression replaced its hand-written
     # pair expansion (same plan modulo expression ids)
     "llm_source_overlap": 16,
+    # streams read through io.read_stream (footer schema, no nanosAsLong
+    # write); memory drains size state to the host's cores
+    "stream_microbatch": 16,
+    "stream_watermark_run": 16,
+    "stream_stateful_count": 16,
+    "stream_static_join": 16,
+    "stream_file_sink": 16,
+    "stream_jdbc_import": 16,
+    "stream_stream_join": 16,
+    "stream_transform_with_state": 16,
 }
 
 

@@ -4,17 +4,23 @@ The reference streams one parquet file in 50k-row Arrow batches
 (reference app.py:88,94,111); Spark's vectorized parquet reader already
 splits by row group / ``spark.sql.files.maxPartitionBytes`` and scans
 partitions in parallel, so a "scan" here is just ``spark.read.parquet``
-— schema from the footer, filters and column pruning pushed down by
-Catalyst.
+with filters and column pruning pushed down by Catalyst. The schema
+comes from the footer, read with pyarrow in the driver as the reference
+does (``pq.ParquetFile(source)``, app.py:88): :func:`table_schema` hands
+it to both the batch reader (:func:`read_table`) and the stream reader
+(:func:`read_stream`), so neither runs Spark's schema-inference job.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 from functools import lru_cache as _lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: tables the driver generates at each scale factor (TESTDATA.md)
 TABLES = (
@@ -41,18 +47,42 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 @_lru_cache(maxsize=256)
-def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Footer-only probe for TIMESTAMP(NANOS) columns (O(1), no data scan
-    — same trick as the reference's metadata reads, app.py:91)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _footer(path: str) -> tuple[StructType, tuple[str, ...]]:
+    """The Spark schema of a parquet file or directory, from one footer
+    alone (no data scan, no Spark job), and its TIMESTAMP(NANOS) columns.
 
-    schema = pq.read_schema(path)
-    return tuple(
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    The schema is the one Spark infers: tz-less timestamps are
+    ``timestamp_ntz``, and nanosecond timestamps, which Spark's reader has
+    no type for, are nano-epoch longs, as ``legacy.parquet.nanosAsLong``
+    reads them. A directory (a stream's source) takes the schema of its
+    first data file, by name."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
+
+    if os.path.isdir(path):
+        path = os.path.join(path, min(f for f in os.listdir(path) if f[0] not in "_."))
+    arrow = pq.read_schema(path)
+    ns = tuple(
+        f.name for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
     )
+    arrow = pa.schema(f.with_type(pa.int64()) if f.name in ns else f for f in arrow)
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True), ns
+
+
+def table_schema(path: str) -> StructType:
+    """The Spark schema of the parquet table at ``path``, from its footer
+    (memoized per path)."""
+    return _footer(path)[0]
+
+
+def _to_micros(df: DataFrame, path: str) -> DataFrame:
+    # nano-epoch longs → µs TimestampType, the precision Spark keeps
+    # anyway (an empty withColumns would still add a Project)
+    ns = _footer(path)[1]
+    if not ns:
+        return df
+    return df.withColumns({c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns})
 
 
 #: memoized source DataFrames, keyed by (session, resolved path). A
@@ -66,27 +96,45 @@ _PARTITIONS_CACHE: dict[tuple[int, int], list] = {}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table. Schema comes from the parquet footer
-    (the distributed analog of the reference's 1-row probe, app.py:72).
+    """Scan one synthetic table, with the schema from its parquet footer
+    (:func:`table_schema`; the distributed analog of the reference's
+    1-row probe, app.py:72), so the read runs no Spark job.
 
-    Parquet TIMESTAMP(NANOS) (e.g. ``events.ts``) is illegal for Spark's
-    vectorized reader; those columns are read as nano-epoch longs
-    (``legacy.parquet.nanosAsLong``) and truncated to µs TimestampType —
-    the same precision Spark would keep anyway.
+    Spark has no type for parquet TIMESTAMP(NANOS) columns and rejects
+    them when it infers a schema; the footer schema reads them as
+    nano-epoch longs, with or without ``nanosAsLong``, which are then
+    truncated to µs TimestampType.
     """
     path = os.path.normpath(table_path(sf_dir, name))
     key = (id(spark), path)
     cached = _READ_CACHE.get(key)
-    if cached is not None:
-        return cached
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    _READ_CACHE[key] = df
-    return df
+    if cached is None:
+        df = spark.read.schema(table_schema(path)).parquet(path)
+        cached = _READ_CACHE[key] = _to_micros(df, path)
+    return cached
+
+
+def as_stream_dir(source: str) -> str:
+    """FileStreamSource requires a directory (its basePath). Real
+    streaming sources are directories of arriving files; the single-file
+    test fixtures get staged into a temp dir via symlink (copy fallback)."""
+    if os.path.isdir(source):
+        return source
+    d = tempfile.mkdtemp(prefix="pis_src_")
+    target = os.path.join(d, os.path.basename(source))
+    try:
+        os.symlink(source, target)
+    except OSError:
+        shutil.copy2(source, target)
+    return d
+
+
+def read_stream(spark: SparkSession, path: str) -> DataFrame:
+    """A file stream over the parquet table at ``path``, with the footer
+    schema and the µs timestamps of :func:`read_table`. A single file is
+    staged into a directory of its own on every call."""
+    stream = spark.readStream.schema(table_schema(path)).parquet(as_stream_dir(path))
+    return _to_micros(stream, path)
 
 
 def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

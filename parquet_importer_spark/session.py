@@ -9,6 +9,14 @@ so the same plans scale to a multi-executor cluster:
   columnar batches, not rows.
 - ``spark.sql.shuffle.partitions`` is only the *initial* value — AQE
   coalesces down; on a real cluster set it ~2-3× total cores.
+- ``spark.sql.legacy.parquet.nanosAsLong`` is set here, once, for the
+  session's life. Spark rejects a TIMESTAMP(NANOS) column only when it
+  infers a file's schema; ``io``'s readers pass the footer schema (such
+  columns typed as longs), so they need no flag and also work in a
+  session this module did not build, such as the driver's. The flag
+  makes the reads that do infer (read-backs of engine output, user
+  files) type such columns the same way instead of failing. A builder
+  that set it mid-session would change every later read in the session.
 - Local masters only: ``spark.python.daemon.module`` is
   ``worker_daemon/zipcache_daemon.py``. Up to Python 3.12,
   ``importlib.invalidate_caches()``, which PySpark calls at the start of
@@ -58,6 +66,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # the TPC-H-ish dims (region/nation/supplier/part) must broadcast
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # session-local timezone pinned to UTC so timestamp parity with

@@ -10,26 +10,9 @@ keeps running continuously against a live directory at scale.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
-
-def as_stream_dir(source: str) -> str:
-    """FileStreamSource requires a directory (its basePath). Real
-    streaming sources are directories of arriving files; the single-file
-    test fixtures get staged into a temp dir via symlink (copy fallback)."""
-    if os.path.isdir(source):
-        return source
-    d = tempfile.mkdtemp(prefix="pis_src_")
-    target = os.path.join(d, os.path.basename(source))
-    try:
-        os.symlink(source, target)
-    except OSError:
-        shutil.copy2(source, target)
-    return d
+from parquet_importer_spark.io import read_stream
 
 
 def incremental_parquet_import(
@@ -38,7 +21,6 @@ def incremental_parquet_import(
     dest_dir: str,
     checkpoint_dir: str,
     mode: str = "replace",
-    max_files_per_trigger: int | None = None,
 ) -> dict[str, int]:
     """Stream parquet files from ``source_dir`` into ``dest_dir``.
 
@@ -50,11 +32,7 @@ def incremental_parquet_import(
     """
     from parquet_importer_spark.sources.sinks import IF_EXISTS_TO_SAVEMODE
 
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(as_stream_dir(source_dir))
+    stream = read_stream(spark, source_dir)
 
     progress = {"batches": 0, "rows": 0}
     first_mode = IF_EXISTS_TO_SAVEMODE[mode]

@@ -16,10 +16,45 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_importer_spark.io import read_table, table_path
+from parquet_importer_spark.io import as_stream_dir, read_stream, read_table, table_path
 from parquet_importer_spark.registry import query
 
 _DEC = "decimal(30,8)"
+
+
+def _drain_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
+    """Drain ``stream`` into a memory sink with an availableNow trigger
+    and return the sink's table.
+
+    Each query has a uuid name, so a fresh temp checkpoint, and its
+    stateful operators (aggregates, dedup, joins, GroupState) take their
+    state-store partition count from ``spark.sql.shuffle.partitions``
+    when the query starts, for good. That count is set to the host's
+    ``defaultParallelism`` around ``start()`` only: every micro-batch
+    writes and commits one store per partition, and a count tuned for
+    batch shuffles (32) made the stateful keys up to 3× slower on a
+    4-core host. The started query holds its own clone of the session
+    conf, so the old value is restored before the drain runs. The
+    durable-checkpoint keys (``stream_file_sink``, ``stream_jdbc_import``)
+    do not drain here; a query restarted from a checkpoint keeps the
+    count recorded in it."""
+    spark = stream.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, old)
+    q.awaitTermination()
+    return spark.table(name)
 
 
 @query(
@@ -176,7 +211,6 @@ def stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_parquet_import,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     work = tempfile.mkdtemp(prefix="pis_stream_")
     dest = os.path.join(work, "dest")
     ckpt = os.path.join(work, "ckpt")
@@ -214,24 +248,9 @@ def stream_watermark_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink in append mode (only watermark-finalized windows emit). The
     oracle above pins the emission semantics themselves — see its
     comment."""
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
-
-    # events.ts may be TIMESTAMP(NANOS) (read as nano-epoch long, io.py
-    # docs) or already µs/ntz depending on the fixture generation — probe
-    # the batch schema and convert only the long form.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    ts_is_long = schema["ts"].dataType.typeName() in ("long", "bigint")
-    name = f"wm_{uuid.uuid4().hex[:8]}"
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(as_stream_dir(table_path(sf_dir, "events")))
-        .withColumn(
-            "ts",
-            F.timestamp_micros(F.expr("ts div 1000"))
-            if ts_is_long
-            else F.col("ts").cast("timestamp"),
-        )
+        read_stream(spark, table_path(sf_dir, "events"))
+        .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "10 minutes")
         .dropDuplicates(["event_id"])
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -241,15 +260,7 @@ def stream_watermark_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(stream, "append")
 
 
 @query(
@@ -271,11 +282,6 @@ def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     production shape."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-
     def running_count(key, pdfs, state):
         # self-contained: executor workers don't import this package
         import pandas as pd  # noqa: PLC0415
@@ -286,10 +292,8 @@ def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((total,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [total]})
 
-    name = f"st_{uuid.uuid4().hex[:8]}"
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(as_stream_dir(table_path(sf_dir, "events")))
+        read_stream(spark, table_path(sf_dir, "events"))
         .groupBy("user_id")
         .applyInPandasWithState(
             running_count,
@@ -299,19 +303,10 @@ def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # latest state per user = the final running counts
-    latest = spark.table(name).groupBy("user_id").agg(
+    return _drain_to_memory(stream, "update").groupBy("user_id").agg(
         F.max("n_events").alias("n_events")
     )
-    return latest
 
 
 @query(
@@ -684,19 +679,13 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode. trigger(availableNow) drains the whole source, so the result
     equals the batch join and the oracle can hash-check a real
     writeStream run — the strongest check a streaming op can get."""
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     cust = F.broadcast(
         read_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_mktsegment"
         )
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(as_stream_dir(table_path(sf_dir, "events")))
+        read_stream(spark, table_path(sf_dir, "events"))
         .join(cust, F.col("user_id") == F.col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(
@@ -706,15 +695,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_value"),
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(stream, "complete")
 
 
 @query(
@@ -736,16 +717,11 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (re-running with the same checkpoint re-emits nothing). The
     returned aggregate reads the SINK's files back, so the oracle
     hash-checks the whole write-then-read path."""
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     base = tempfile.mkdtemp(prefix="pis_filesink_")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     q = (
-        spark.readStream.schema(schema)
-        .parquet(as_stream_dir(table_path(sf_dir, "events")))
+        read_stream(spark, table_path(sf_dir, "events"))
         .select("event_id", "event_type", "value")
         .writeStream.format("parquet")
         .option("path", out)
@@ -856,10 +832,7 @@ def stream_jdbc_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     xlin 0.33); this key keeps Derby because it is the only engine the
     sandbox lets the STREAMING hop hash-verify end-to-end."""
     from parquet_importer_spark.sources.sinks import write_jdbc
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     db_dir = tempfile.mkdtemp(prefix="pis_derby_stream_")
     spark._jvm.java.lang.System.setProperty(  # noqa: SLF001
         "derby.stream.error.file", os.path.join(db_dir, "derby.log")
@@ -878,8 +851,7 @@ def stream_jdbc_import(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     q = (
-        spark.readStream.schema(schema)
-        .parquet(as_stream_dir(table_path(sf_dir, "events")))
+        read_stream(spark, table_path(sf_dir, "events"))
         .select("event_id", "event_type")
         .writeStream.foreachBatch(_sink)
         .option("checkpointLocation", ckpt)
@@ -996,32 +968,17 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-user attribution aggregate runs as a batch query over the
     sink's output (the production shape: join stream → landing table →
     downstream rollup)."""
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    # Same fixture hazard as stream_watermark_run above: events.ts has
-    # shipped as TIMESTAMP(NANOS) (surfaced as a nano-epoch long under
-    # nanosAsLong) in some rounds — an unconditional cast('timestamp')
-    # would then read the long as epoch SECONDS and silently shift every
-    # join window. Probe and convert the long form explicitly.
-    ts_is_long = schema["ts"].dataType.typeName() in ("long", "bigint")
-    ts_expr = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
+    # staged once: read_stream stages a single file anew on every call
     src = as_stream_dir(table_path(sf_dir, "events"))
 
     def side(event_type: str, prefix: str):
         return (
-            spark.readStream.schema(schema)
-            .parquet(src)
+            read_stream(spark, src)
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),
                 F.col("event_id").alias(f"{prefix}_id"),
-                ts_expr.alias(f"{prefix}_ts"),
+                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
                 *([F.col("value")] if prefix == "p" else []),
             )
             .withWatermark(f"{prefix}_ts", "1 hour")
@@ -1033,17 +990,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
     )
-    name = f"ssj2_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_to_memory(joined, "append")
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_attributed"),
@@ -1538,11 +1486,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState (one packed state tuple instead of named
     state variables), keeping the query surface and output stable;
     with protobuf present the real StatefulProcessor path runs."""
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-
     try:
         from google.protobuf import descriptor  # noqa: F401, PLC0415
 
@@ -1550,10 +1493,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ImportError:
         has_protobuf = False
 
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    source = spark.readStream.schema(schema).parquet(
-        as_stream_dir(table_path(sf_dir, "events"))
-    )
+    source = read_stream(spark, table_path(sf_dir, "events"))
     out_schema = "user_id bigint, n_events bigint, total_cents bigint"
     if has_protobuf:
         from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
@@ -1635,17 +1575,9 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # latest emission per user = the final running totals
     return (
-        spark.table(name)
+        _drain_to_memory(stream, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),

@@ -179,12 +179,10 @@ def test_file_sink_exactly_once_on_checkpoint_replay(spark):
 
     from pyspark.sql import functions as F
 
-    from parquet_importer_spark.io import table_path
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
+    from parquet_importer_spark.io import as_stream_dir, table_path, table_schema
 
     sf = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf, "events")).schema
+    schema = table_schema(table_path(sf, "events"))
     base = tempfile.mkdtemp(prefix="pis_eo_")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
     # stage ONCE: the checkpoint pins the source path, so both drains
@@ -300,12 +298,10 @@ def test_file_stream_picks_up_only_new_files(spark):
     import shutil
     import tempfile
 
-    from parquet_importer_spark.io import table_path
-    from parquet_importer_spark.streaming.microbatch import as_stream_dir
+    from parquet_importer_spark.io import as_stream_dir, table_path, table_schema
 
     sf = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf, "events")).schema
+    schema = table_schema(table_path(sf, "events"))
     src = as_stream_dir(table_path(sf, "events"))
     base = tempfile.mkdtemp(prefix="pis_inc_")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")

@@ -106,13 +106,8 @@ def ledger_entry(spark, key: str, sf_dir: str = SF_DIR):
     """Build ``key`` in a job group of its own; return ``(df, plan,
     entry, jobs)``: ``entry`` is the plan's fingerprint plus
     ``build_jobs``, the number of ``jobs`` (ids) the build ran."""
-    from parquet_importer_spark.io import read_all
     from parquet_importer_spark.suite import QUERIES
 
-    # a session's first read of a table runs a schema job (read_table
-    # caches the frame per session): do those reads outside the group,
-    # so a key's count does not depend on which keys ran before it
-    read_all(spark, sf_dir)
     sc = spark.sparkContext
     group = f"build:{key}:{uuid.uuid4().hex}"
     sc.setJobGroup(group, key)

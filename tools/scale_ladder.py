@@ -120,21 +120,15 @@ def _drain_only(spark, sf_dir: str) -> None:
     insert wall (see module docstring)."""
     import tempfile  # noqa: PLC0415
 
-    from parquet_importer_spark.io import table_path  # noqa: PLC0415
-    from parquet_importer_spark.streaming.microbatch import (  # noqa: PLC0415
-        as_stream_dir,
-    )
+    from parquet_importer_spark.io import read_stream, table_path  # noqa: PLC0415
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     ckpt = tempfile.mkdtemp(prefix="pis_drain_ckpt_")
 
     def _sink(batch_df, batch_id: int) -> None:
         batch_df.write.format("noop").mode("overwrite").save()
 
     q = (
-        spark.readStream.schema(schema)
-        .parquet(as_stream_dir(table_path(sf_dir, "events")))
+        read_stream(spark, table_path(sf_dir, "events"))
         .select("event_id", "event_type")
         .writeStream.foreachBatch(_sink)
         .option("checkpointLocation", ckpt)
